@@ -33,7 +33,7 @@ from lightrag_spark.constants import (
 )
 from lightrag_spark.operators import ann
 from lightrag_spark.operators import datapipe as dp
-from lightrag_spark.plans.kg_build import KGBuildConfig, build_kg
+from lightrag_spark.plans.kg_build import KGBuildConfig, build_kg, extract_kg
 
 # ---- simple-mode knobs (mirrored into the oracle SQL below) ----------------
 CHUNK = 32
@@ -1414,7 +1414,7 @@ def _q_kg_upsert_edges(spark, sf):
     docs = _docs_for_kg(spark, sf)
     first_hex = F.substring("doc_id", 5, 1)
     r_a = build_kg(docs.filter(first_hex.isin(*_UPSERT_STORED_HEX)), cfg)
-    r_b = build_kg(docs.filter(~first_hex.isin(*_UPSERT_STORED_HEX)), cfg)
+    r_b = extract_kg(docs.filter(~first_hex.isin(*_UPSERT_STORED_HEX)), cfg)
     _nodes, edges = upsert_graph(
         r_a.kg_nodes, r_a.kg_edges, r_b.mentions, r_b.triples, cfg
     )
@@ -1438,7 +1438,7 @@ def _q_kg_upsert_nodes(spark, sf):
     docs = _docs_for_kg(spark, sf)
     first_hex = F.substring("doc_id", 5, 1)
     r_a = build_kg(docs.filter(first_hex.isin(*_UPSERT_STORED_HEX)), cfg)
-    r_b = build_kg(docs.filter(~first_hex.isin(*_UPSERT_STORED_HEX)), cfg)
+    r_b = extract_kg(docs.filter(~first_hex.isin(*_UPSERT_STORED_HEX)), cfg)
     nodes, _edges = upsert_graph(
         r_a.kg_nodes, r_a.kg_edges, r_b.mentions, r_b.triples, cfg
     )

@@ -449,3 +449,10 @@ def with_degrees(nodes: DataFrame, edges: DataFrame) -> tuple[DataFrame, DataFra
         .withColumn("rank", (F.col("src_degree") + F.col("tgt_degree")).cast("long"))
     )
     return nodes_d, edges_d
+
+
+def finish_graph(nodes: DataFrame, edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Merged nodes + edges -> final tables: UNKNOWN nodes for endpoints
+    with no entity record, then degrees and edge rank.  The last step of
+    every build, rebuild and upsert."""
+    return with_degrees(add_unknown_endpoint_nodes(nodes, edges), edges)

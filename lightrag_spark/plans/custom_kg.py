@@ -261,14 +261,9 @@ def insert_custom_chunks(
     import os
 
     from ..operators.extraction import extract_records, split_records
-    from ..operators.merge import (
-        add_unknown_endpoint_nodes,
-        merge_entity_nodes,
-        merge_relation_edges,
-        with_degrees,
-    )
+    from ..operators.merge import finish_graph, merge_entity_nodes, merge_relation_edges
     from .incremental_merge import upsert_graph
-    from .kg_build import KGBuildConfig
+    from .kg_build import KGBuildConfig, release
     from ..streaming.kg_ingest import _commit_pair, _committed
 
     cfg = cfg or KGBuildConfig()
@@ -343,15 +338,22 @@ def insert_custom_chunks(
             stored_e = spark.read.parquet(edges_path)
             nodes, edges = upsert_graph(stored_n, stored_e, mentions, triples, cfg)
         else:
-            nodes = merge_entity_nodes(mentions, salts=cfg.merge_salts)
-            edges = merge_relation_edges(triples, salts=cfg.merge_salts)
-            nodes = add_unknown_endpoint_nodes(nodes, edges)
-            nodes, edges = with_degrees(nodes, edges)
+            nodes, edges = finish_graph(
+                merge_entity_nodes(
+                    mentions, salts=cfg.merge_salts,
+                    max_fragments=cfg.max_description_fragments,
+                ),
+                merge_relation_edges(
+                    triples, salts=cfg.merge_salts,
+                    max_fragments=cfg.max_description_fragments,
+                ),
+            )
 
         os.makedirs(graph_dir, exist_ok=True)
         cache.write.mode("append").parquet(cache_path)
         _commit_pair(nodes, edges, graph_dir)
         new_batch.write.mode("append").parquet(chunks_path)
+        release(nodes, edges)
     finally:
         records.unpersist()
     return {

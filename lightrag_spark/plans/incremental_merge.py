@@ -30,14 +30,13 @@ from pyspark.sql import functions as F
 
 from ..constants import MAX_FILE_PATHS, MAX_SOURCE_IDS
 from ..operators.merge import (
-    add_unknown_endpoint_nodes,
     edge_pair,
+    finish_graph,
     merge_entity_nodes,
     merge_relation_edges,
-    with_degrees,
 )
 from ..operators.summary import finalize_descriptions
-from .kg_build import KGBuildConfig
+from .kg_build import KGBuildConfig, checkpoint_concurrently
 
 
 def _capped_union(stored: str, new: str, cap: int):
@@ -262,9 +261,17 @@ def upsert_graph(
     new_triples: DataFrame,
     cfg: KGBuildConfig | None = None,
 ) -> tuple[DataFrame, DataFrame]:
+    """stored kg_nodes/kg_edges + new mentions/triples -> the upserted
+    final tables.  Under ``cfg.cache_records`` the upserted node and edge
+    tables are pinned before UNKNOWN endpoints and degrees are derived, so
+    every consumer (both table writes, the unknown-endpoint and degree
+    joins) scans the pins and the merges and summaries run once."""
     cfg = cfg or KGBuildConfig()
     nodes = upsert_nodes(stored_nodes.filter(F.col("entity_type") != "UNKNOWN"),
                          new_mentions, cfg)
     edges = upsert_edges(stored_edges, new_triples, cfg)
-    nodes = add_unknown_endpoint_nodes(nodes, edges)
-    return with_degrees(nodes, edges)
+    if cfg.cache_records:
+        # independent reads of the stored tables and the materialized new
+        # mentions / triples: concurrent first-touch is safe
+        edges, nodes = checkpoint_concurrently([edges, nodes])
+    return finish_graph(nodes, edges)

@@ -11,10 +11,17 @@ post-agg joins).  The extraction cache rows make the extraction stage
 re-derivable — resume recomputes merges from the cache table rather than
 re-calling the model (the reference's delete/rebuild path,
 operate.py:1005-1318, works the same way).
+
+``build_kg`` is two halves: ``extract_kg`` (docs -> chunks -> records ->
+mentions / triples / llm_cache) then ``merge_kg`` (merges -> summaries ->
+UNKNOWN endpoints -> degrees).  An ingest batch runs the first half, then
+either the second or an upsert into the stored graph.
 """
 
 from __future__ import annotations
 
+import os
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -29,12 +36,7 @@ from ..constants import (
 )
 from ..operators.chunking import chunk_documents
 from ..operators.extraction import extract_records, split_records
-from ..operators.merge import (
-    add_unknown_endpoint_nodes,
-    merge_entity_nodes,
-    merge_relation_edges,
-    with_degrees,
-)
+from ..operators.merge import finish_graph, merge_entity_nodes, merge_relation_edges
 from ..operators.summary import finalize_descriptions
 
 
@@ -122,6 +124,40 @@ def checkpoint_concurrently(dfs) -> list:
         return [f.result() for f in futs]
 
 
+def release(*dfs) -> None:
+    """Drop the blocks of every localCheckpoint that the frames' plans
+    scan (a checkpointed frame scans only itself).  Any later read of a
+    released checkpoint fails, so call this once nothing will touch the
+    frames again.  ``persist``ed frames are released with ``unpersist``."""
+    for df in dfs:
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.getClass().getSimpleName() == "LogicalRDD":
+                leaf.rdd().unpersist(False)
+
+
+def _tick(label: str, t0: float) -> float:
+    """Phase timer, printed when SPARK_KG_DEBUG_TIMING=1 (bench_extra.py
+    phases)."""
+    if os.environ.get("SPARK_KG_DEBUG_TIMING") == "1":
+        print(f"[kg_build] {label}: {time.time()-t0:.1f}s", flush=True)
+    return time.time()
+
+
+@dataclass
+class KGExtraction:
+    """The extraction half of a build.  ``records`` is the full extractor
+    output (mentions, triples and the raw model responses); ``llm_cache``
+    reads it lazily, so release it only after the cache rows are written."""
+
+    chunks: DataFrame
+    records: DataFrame
+    mentions: DataFrame
+    triples: DataFrame
+    llm_cache: DataFrame
+
+
 @dataclass
 class KGBuildResult:
     chunks: DataFrame
@@ -133,34 +169,21 @@ class KGBuildResult:
     config: KGBuildConfig = field(default_factory=KGBuildConfig)
 
 
-def build_kg(
+def extract_kg(
     docs: DataFrame,
     cfg: KGBuildConfig | None = None,
     llm_cache: DataFrame | None = None,
     model_call_counter=None,
-) -> KGBuildResult:
-    """docs(doc_id, text, file_path, doc_order) -> knowledge-graph tables.
-
-    All returned DataFrames are lazy; callers decide what to materialize
-    (tests collect, the pipeline writes partitioned parquet/Iceberg).
+) -> KGExtraction:
+    """docs(doc_id, text, file_path, doc_order) -> chunks, extraction
+    records and their mention / triple / cache splits.
 
     ``llm_cache`` (args_hash, chunk_id, pass_index, content, create_time) is
     the prior run's extraction cache: cached responses are re-parsed instead
     of re-calling the model (the resume primitive, SURVEY.md §3.3).
     """
     cfg = cfg or KGBuildConfig()
-
-    import os as _os
-    import time as _time
-
-    _dbg = _os.environ.get("SPARK_KG_DEBUG_TIMING") == "1"
-
-    def _tick(label, t0):
-        if _dbg:
-            print(f"[kg_build] {label}: {_time.time()-t0:.1f}s", flush=True)
-        return _time.time()
-
-    _t = _time.time()
+    _t = time.time()
     par = cfg.parallelism or docs.sparkSession.sparkContext.defaultParallelism * 2
     # Spread documents across workers for the chunking UDF (narrow transform
     # — inherits input partitioning otherwise), then re-spread chunks for the
@@ -234,7 +257,18 @@ def build_kg(
         # first-touch is safe and the two jobs overlap.
         mentions, triples = checkpoint_concurrently([mentions, triples])
         _t = _tick("mentions+triples checkpoints (concurrent)", _t)
+    return KGExtraction(
+        chunks=chunks, records=records, mentions=mentions, triples=triples, llm_cache=cache
+    )
 
+
+def merge_kg(
+    mentions: DataFrame, triples: DataFrame, cfg: KGBuildConfig | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """mentions + triples -> (kg_nodes, kg_edges): the salted merges, the
+    description summaries, UNKNOWN endpoints and degrees."""
+    cfg = cfg or KGBuildConfig()
+    _t = time.time()
     nodes = merge_entity_nodes(
         mentions, salts=cfg.merge_salts, max_fragments=cfg.max_description_fragments
     )
@@ -252,6 +286,7 @@ def build_kg(
         # tail instead of waiting for it (both dominated by stage latency,
         # not data volume, at bench scale).
         edges, nodes = checkpoint_concurrently([edges, nodes])
+        merged = [nodes, edges]
         _t = _tick("edges+nodes merges (concurrent checkpoint)", _t)
 
     if cfg.summarize:
@@ -266,8 +301,7 @@ def build_kg(
             "_pair"
         )
 
-    nodes = add_unknown_endpoint_nodes(nodes, edges)
-    nodes, edges = with_degrees(nodes, edges)
+    nodes, edges = finish_graph(nodes, edges)
     if cfg.cache_records:
         # Pin the FINAL tables too: every downstream consumer (the bench's
         # sequential kg_nodes/kg_edges counts, the 30+ kg_* analytics
@@ -282,12 +316,34 @@ def build_kg(
         # caches, so concurrent first-touch is safe — and the two jobs
         # overlap their tails.
         nodes, edges = checkpoint_concurrently([nodes, edges])
+        # the finals' lineage is truncated: nothing reads the merge pins now
+        release(*merged)
         _t = _tick("final nodes+edges (concurrent checkpoint)", _t)
+    return nodes, edges
+
+
+def build_kg(
+    docs: DataFrame,
+    cfg: KGBuildConfig | None = None,
+    llm_cache: DataFrame | None = None,
+    model_call_counter=None,
+) -> KGBuildResult:
+    """docs(doc_id, text, file_path, doc_order) -> knowledge-graph tables:
+    ``extract_kg`` then ``merge_kg``.
+
+    All returned DataFrames are lazy unless ``cfg.cache_records`` pins
+    them; callers decide what to materialize (tests collect, the pipeline
+    writes partitioned parquet/Iceberg).  ``llm_cache`` is as in
+    ``extract_kg``.
+    """
+    cfg = cfg or KGBuildConfig()
+    ex = extract_kg(docs, cfg, llm_cache, model_call_counter)
+    nodes, edges = merge_kg(ex.mentions, ex.triples, cfg)
     return KGBuildResult(
-        chunks=chunks,
-        mentions=mentions,
-        triples=triples,
-        llm_cache=cache,
+        chunks=ex.chunks,
+        mentions=ex.mentions,
+        triples=ex.triples,
+        llm_cache=ex.llm_cache,
         kg_nodes=nodes,
         kg_edges=edges,
         config=cfg,

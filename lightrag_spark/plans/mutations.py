@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..operators.extraction import extract_records, split_records
 from ..operators.merge import (
-    add_unknown_endpoint_nodes,
+    finish_graph,
     merge_entity_nodes,
     merge_relation_edges,
     with_degrees,
@@ -97,8 +97,7 @@ def rebuild_kg_from_chunks(
             "_pair", F.concat(F.lit("("), "src", F.lit(", "), "tgt", F.lit(")"))
         )
         edges = finalize_descriptions(edges, "_pair", "Relation", cfg.tokenizer_kind).drop("_pair")
-    nodes = add_unknown_endpoint_nodes(nodes, edges)
-    return with_degrees(nodes, edges)
+    return finish_graph(nodes, edges)
 
 
 def delete_documents(

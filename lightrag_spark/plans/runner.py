@@ -39,12 +39,7 @@ from ..operators.extraction import (
     split_errors,
     split_records,
 )
-from ..operators.merge import (
-    add_unknown_endpoint_nodes,
-    merge_entity_nodes,
-    merge_relation_edges,
-    with_degrees,
-)
+from ..operators.merge import finish_graph, merge_entity_nodes, merge_relation_edges
 from ..operators.summary import finalize_descriptions
 from .kg_build import KGBuildConfig
 
@@ -265,8 +260,7 @@ def run_indexing(
         edges = finalize_descriptions(edges, "_pair", "Relation", cfg.tokenizer_kind).drop("_pair")
     _swap_in(edges, os.path.join(out_dir, "kg_edges"))
     edges = spark.read.parquet(os.path.join(out_dir, "kg_edges"))
-    nodes = add_unknown_endpoint_nodes(nodes, edges)
-    nodes, edges_final = with_degrees(nodes, edges)
+    nodes, edges_final = finish_graph(nodes, edges)
     _swap_in(nodes, os.path.join(out_dir, "kg_nodes"))
     _swap_in(edges_final, os.path.join(out_dir, "kg_edges") + "_ranked")
     # the ranked table supersedes the raw one

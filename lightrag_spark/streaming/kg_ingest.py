@@ -5,12 +5,27 @@ documents`` writes PENDING doc-status rows and ``apipeline_process_enqueue_
 documents`` (reference pipeline.py:905-1318) scans for them, extracts, and
 merges into the stored graph under an async lock.  The Spark-native face of
 that loop is Structured Streaming: ``readStream`` over the pages table, and
-per micro-batch the *same* batch operators (sanitize -> chunk -> extract ->
-split) feed ``upsert_graph`` against the stored node/edge tables, which are
-then committed atomically (write-to-tmp + rename — the local-FS stand-in
+one ``upsert_pages_batch`` per micro-batch.
+
+Per-batch contract — each piece of work runs once:
+
+- extract once: ``extract_kg`` (sanitize -> chunk -> extract -> split)
+  runs over the batch's pages only;
+- merge or upsert once: with no committed graph yet the batch runs the
+  build's merge half (``merge_kg``); otherwise it runs ``upsert_graph``
+  against the stored node/edge tables, merging each new record once
+  against the stored row, as the reference does.  Never both;
+- pin once: the extraction records, chunks, mentions and triples, and the
+  merged or upserted node/edge tables are each materialized a single
+  time, and the cache append and both table writes scan those pins;
+- release at commit: everything the batch pinned is dropped when it
+  commits (the records right after the cache append), so a long-running
+  stream holds no blocks from earlier batches.
+
+The commit itself is atomic (write-to-tmp + rename — the local-FS stand-in
 for an Iceberg snapshot commit, plans/runner.py:56).  The extraction cache
-rows append per batch, so delete/rebuild and resume work identically over a
-streamed graph and a batch-built one.
+rows append per batch, so delete/rebuild and resume work identically over
+a streamed graph and a batch-built one.
 
 Exactly-once story, piece by piece:
 
@@ -32,6 +47,7 @@ order, exactly like the reference's insertion order).
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import shutil
 from typing import Callable
@@ -39,7 +55,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.incremental_merge import upsert_graph
-from ..plans.kg_build import KGBuildConfig, build_kg
+from ..plans.kg_build import KGBuildConfig, extract_kg, merge_kg, release
 from ..sources.pages import PAGES_SCHEMA, enqueue_documents
 
 NODES = "kg_nodes"
@@ -78,50 +94,46 @@ def upsert_pages_batch(
     graph_dir: str,
     cfg: KGBuildConfig | None = None,
 ) -> dict:
-    """One micro-batch body: pages -> docs -> extract -> upsert -> commit.
+    """One micro-batch body: pages -> docs -> extract -> merge or upsert ->
+    commit.
 
     Also usable directly as the incremental-batch API (the reference's
     ``ainsert`` on an existing graph) — foreachBatch below just calls it.
     Returns per-batch lineage metrics (the streaming twin of the runner's
     metrics side-table, plans/runner.py:140).
+
+    The body always pins (``cache_records`` on, whatever ``cfg`` says):
+    the extraction fans out into the cache append and both table writes,
+    and the merge or upsert into both writes, so without the pins each
+    consumer would re-run the model stage and the summary UDF.
     """
-    cfg = cfg or KGBuildConfig()
-    docs = enqueue_documents(pages)
-    kg = build_kg(docs, cfg)
-
-    # Pin the extraction output before the fan-out: the node and edge
-    # writes each walk the full lineage, and without a materialized persist
-    # the model stage would run once per consumer (same rationale as
-    # kg_build.cache_records, bounded here so a long-running stream does
-    # not accumulate persisted RDDs across batches).
-    from pyspark.storagelevel import StorageLevel
-
-    mentions = kg.mentions.persist(StorageLevel.MEMORY_AND_DISK)
-    triples = kg.triples.persist(StorageLevel.MEMORY_AND_DISK)
-    n_mentions = mentions.count()
-    n_triples = triples.count()
-
+    cfg = dataclasses.replace(cfg or KGBuildConfig(), cache_records=True)
+    ex = extract_kg(enqueue_documents(pages), cfg)
+    pins = [ex.chunks, ex.mentions, ex.triples]
     nodes_path = os.path.join(graph_dir, NODES)
     edges_path = os.path.join(graph_dir, EDGES)
     try:
         if _committed(nodes_path) and _committed(edges_path):
             stored_n = spark.read.parquet(nodes_path)
             stored_e = spark.read.parquet(edges_path)
-            nodes, edges = upsert_graph(stored_n, stored_e, mentions, triples, cfg)
+            nodes, edges = upsert_graph(stored_n, stored_e, ex.mentions, ex.triples, cfg)
         else:
             # first batch: a fresh build IS the upsert against an empty graph
-            nodes, edges = kg.kg_nodes, kg.kg_edges
+            nodes, edges = merge_kg(ex.mentions, ex.triples, cfg)
+        pins += [nodes, edges]
 
         os.makedirs(graph_dir, exist_ok=True)
         # cache rows append-only BEFORE the graph swap: a crash in between
         # leaves extra cache rows (keyed by args_hash — harmless, the resume
         # path dedups on content) rather than a graph ahead of its cache.
-        kg.llm_cache.write.mode("append").parquet(os.path.join(graph_dir, CACHE))
+        ex.llm_cache.write.mode("append").parquet(os.path.join(graph_dir, CACHE))
+        # the cache rows were the records' last reader
+        ex.records.unpersist()
         _commit_pair(nodes, edges, graph_dir)
+        return {"mentions": ex.mentions.count(), "triples": ex.triples.count()}
     finally:
-        mentions.unpersist()
-        triples.unpersist()
-    return {"mentions": n_mentions, "triples": n_triples}
+        ex.records.unpersist()
+        release(*pins)
 
 
 def stream_kg_ingest(

@@ -179,3 +179,24 @@ def test_insert_custom_chunks_create_patch_noop(spark, tmp_path):
     # empty input -> noop without touching the dir
     r4 = insert_custom_chunks(spark, gd, "x", ["", "  "], cfg=cfg)
     assert r4["mode"] == "noop" and r4["operation_id"] is None
+
+
+def test_insert_custom_chunks_first_batch_caps_fragments(spark, tmp_path):
+    """The first batch (no stored graph) honours max_description_fragments
+    like the upsert branch does."""
+    from lightrag_spark.plans.custom_kg import insert_custom_chunks
+    from lightrag_spark.plans.kg_build import KGBuildConfig
+
+    # the gleaning pass lengthens the description of every third entity
+    # of a chunk, so "alpha" gets a different description in each chunk
+    texts = ["alpha works here", "gamma alpha works"]
+
+    def max_fragments(cap):
+        gd = str(tmp_path / f"graph{cap}")
+        cfg = KGBuildConfig(merge_salts=2, max_description_fragments=cap)
+        insert_custom_chunks(spark, gd, "capped doc", texts, cfg=cfg)
+        nodes = spark.read.parquet(gd + "/kg_nodes")
+        return max(len(r["descriptions"]) for r in nodes.collect())
+
+    assert max_fragments(8) > 1
+    assert max_fragments(1) == 1

@@ -109,3 +109,54 @@ def test_stream_kg_ingest_matches_batch(spark, tmp_path):
     q3.awaitTermination()
     assert len(batches) == 2
     assert os.path.getmtime(os.path.join(graph_dir, "kg_nodes", "_SUCCESS")) == before
+
+
+def _rows(df):
+    cols = sorted(df.columns)
+    return sorted(repr([r[c] for c in cols]) for r in df.select(*cols).collect())
+
+
+def _pinned(spark):
+    """(cached Datasets, ids of persisted RDDs) — checkpoints are persisted
+    RDDs, so together these are everything a call can leave pinned."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    return cm.numCachedEntries(), set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_upsert_pages_batch_eager(spark, tmp_path, monkeypatch):
+    """The pinned (cache_records) path: two batches equal build_kg +
+    upsert_graph row for row, the second batch never runs the merge
+    half, and neither batch leaves anything pinned after its commit."""
+    import dataclasses
+
+    from lightrag_spark.streaming import kg_ingest
+
+    cfg = dataclasses.replace(CFG, cache_records=True)
+    graph_dir = str(tmp_path / "graph")
+    pages1 = synthesize_pages(spark, 12, seed=5, min_words=30, max_words=150)
+    pages2 = synthesize_pages(spark, 6, seed=13, min_words=30, max_words=100)
+
+    def batch(pages):
+        n_cached, rdds = _pinned(spark)
+        m = kg_ingest.upsert_pages_batch(spark, pages, graph_dir, cfg)
+        n_cached_after, rdds_after = _pinned(spark)
+        assert n_cached_after == n_cached
+        assert rdds_after <= rdds, f"batch left RDDs pinned: {rdds_after - rdds}"
+        return m
+
+    batch(pages1)
+
+    def no_merge(*_a, **_k):
+        raise AssertionError("a batch against a stored graph ran the merge half")
+
+    monkeypatch.setattr(kg_ingest, "merge_kg", no_merge)
+    m2 = batch(pages2)
+
+    exp1 = build_kg(enqueue_documents(pages1), cfg)
+    kg2 = build_kg(enqueue_documents(pages2), cfg)
+    exp_n, exp_e = upsert_graph(exp1.kg_nodes, exp1.kg_edges, kg2.mentions, kg2.triples, cfg)
+    got_n = spark.read.parquet(os.path.join(graph_dir, "kg_nodes"))
+    got_e = spark.read.parquet(os.path.join(graph_dir, "kg_edges"))
+    assert _rows(got_n) == _rows(exp_n)
+    assert _rows(got_e) == _rows(exp_e)
+    assert m2 == {"mentions": kg2.mentions.count(), "triples": kg2.triples.count()}
