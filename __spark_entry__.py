@@ -2906,13 +2906,13 @@ _METAPATH_MAXDEG = 64
 
 
 def _q_sim_norm_hist(spark, sf):
-    """Embedding-norm distribution per label (composition: _norm fold ->
+    """Embedding-norm distribution per label (composition: ann._norm fold ->
     datapipe.value_histogram): the embedding-health profile — zero/huge
     norms flag broken encoders before any similarity op consumes them."""
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     norms = emb.select(
         F.col("label").cast("long").alias("label"),
-        dp._norm(F.col("embedding")).alias("norm"),
+        ann._norm(F.col("embedding")).alias("norm"),
     )
     return dp.value_histogram(norms, group="label", col="norm")
 

@@ -6,7 +6,9 @@ computation is timed, not the sink; label jobs; capture formatted plans.
 Usage:
   python bench_extra.py time  <query> [...]   # noop-sink timing, best/median of N
   python bench_extra.py plan  <query> [...]   # .explain("formatted") -> plans/r06/<q>.txt
-  python bench_extra.py phases                # kg_build_full phase breakdown (bench cfg)
+
+Per-layer build time (chunking, extraction, merge, summary) comes from
+Spark's event log: ``python3 kgbench/run.py --workload index --trace 1``.
 
 Env (same contract as bench.py):
   SPARK_GRAFT_SF_DIR   input dir (default /root/testdata/sf0.1)
@@ -49,32 +51,6 @@ def main():
     import __spark_entry__ as em
 
     spark = get_session()
-
-    if mode == "phases":
-        os.environ["SPARK_KG_DEBUG_TIMING"] = "1"
-        from lightrag_spark.plans.kg_build import KGBuildConfig, build_kg
-
-        docs = em._docs_for_kg(spark, sf_dir)
-        cfg = KGBuildConfig(
-            tokenizer_kind="regex",
-            chunk_token_size=64,
-            chunk_overlap_token_size=8,
-            max_gleaning=1,
-            merge_salts=16,
-            with_source_spans=True,
-            cache_records=True,
-        )
-        docs.cache()
-        docs.count()
-        t0 = time.time()
-        r = build_kg(docs, cfg)
-        n_nodes = r.kg_nodes.count()
-        print(f"[phases] kg_nodes.count ({n_nodes})")
-        n_edges = r.kg_edges.count()
-        print(f"[phases] kg_edges.count ({n_edges})")
-        print(f"[phases] TOTAL kg_build_full: {time.time()-t0:.2f}s")
-        spark.stop()
-        return
 
     if os.environ.get("BENCH_EXTRA_WARM") == "1":
         t0 = time.time()

@@ -483,26 +483,28 @@ def dropped_megabuckets(
     return sizes.filter(F.col("_n") > max_bucket)
 
 
+def _norm(v: Column) -> Column:
+    """Expression-form L2 norm (sequential fold from 0.0)."""
+    return F.sqrt(
+        F.aggregate(
+            F.transform(v, lambda x: x.cast("double") * x.cast("double")),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+    )
+
+
 def _cosine(a: Column, b: Column) -> Column:
     """Expression-form cosine (sequential fold, 4dp) — the formula the
     DuckDB oracle replays; kept as the no-Arrow fallback and for tiny
-    inputs (IVF centroid lookups)."""
+    inputs (IVF centroid lookups), and the one cosine of the brute-force
+    datapipe operators (cosine_topk, knn_label_vote, mmr_topk)."""
     dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-
-    def norm(v: Column) -> Column:
-        return F.sqrt(
-            F.aggregate(
-                F.transform(v, lambda x: x.cast("double") * x.cast("double")),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
-
-    return F.round(dot / (norm(a) * norm(b)), 4)
+    return F.round(dot / (_norm(a) * _norm(b)), 4)
 
 
 @lru_cache(maxsize=1)

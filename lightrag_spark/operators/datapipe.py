@@ -22,9 +22,13 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from .ann import _cosine
 
 # ---- shared knobs (oracle SQL in __spark_entry__ derives from these) -------
 SHINGLE_N = 3          # word-shingle width
@@ -46,6 +50,25 @@ STOPWORDS = ["the", "a", "of", "and", "in", "on", "at", "is", "was"]
 
 def tokens_col(text: str = "text") -> Column:
     return F.split(F.trim(F.col(text)), r"\s+")
+
+
+def term_postings(
+    docs: DataFrame, text: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """(id_col, term, tf) — the postings table every lexical scorer here
+    reads: :func:`tokens_col` tokens, one map-side-combined count per
+    (document, term).
+
+    ``evaluation.retrieval_check`` keeps its own tokenizer: it replays the
+    reference audit's (lower-cased ``[a-z0-9]+``, stopwords and single
+    characters dropped, over ``name``/``token`` columns), so sharing this
+    helper would make it branch on which caller it serves.
+    """
+    return (
+        docs.select(F.col(id_col), F.explode(tokens_col(text)).alias("term"))
+        .groupBy(id_col, "term")
+        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
+    )
 
 
 def shingles_col(toks: Column, n: int = SHINGLE_N, distinct: bool = True) -> Column:
@@ -738,24 +761,6 @@ def simhash_near_pairs(
 # ---------------------------------------------------------------------------
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
 def cosine_topk(
     embeddings: DataFrame,
     n_queries: int = 8,
@@ -775,13 +780,7 @@ def cosine_topk(
         F.broadcast(q)
         .crossJoin(c)
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "sim",
-            F.round(
-                _dot(F.col("qv"), F.col("cv")) / (_norm(F.col("qv")) * _norm(F.col("cv"))),
-                4,
-            ),
-        )
+        .withColumn("sim", _cosine(F.col("qv"), F.col("cv")))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
@@ -820,13 +819,7 @@ def knn_label_vote(
     scored = (
         a.crossJoin(b)
         .filter(F.col("qid") != F.col("nid"))
-        .withColumn(
-            "sim",
-            F.round(
-                _dot(F.col("qv"), F.col("nv")) / (_norm(F.col("qv")) * _norm(F.col("nv"))),
-                4,
-            ),
-        )
+        .withColumn("sim", _cosine(F.col("qv"), F.col("nv")))
     )
     w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
     topk = scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
@@ -1736,6 +1729,18 @@ def asof_join(
     )
 
 
+def _tfidf(docs: DataFrame, text: str, id_col: str) -> DataFrame:
+    """(id_col, term, tf, df, w) — :func:`term_postings` with document
+    frequencies and the tf-idf weight w = tf * ln(N/df)."""
+    tf = term_postings(docs, text, id_col)
+    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
+    n = docs.count()
+    return tf.join(dfreq, "term").withColumn(
+        "w",
+        F.col("tf").cast("double") * F.log(F.lit(float(n)) / F.col("df").cast("double")),
+    )
+
+
 def tfidf_top_terms(
     docs: DataFrame, k: int = 3, text: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -1752,18 +1757,7 @@ def tfidf_top_terms(
     window — WindowGroupLimit prunes to k rows per doc map-side.  N is a
     driver scalar count (the cooccurrence_lift precedent).
     """
-    tok = docs.select(F.col(id_col), F.explode(tokens_col(text)).alias("term"))
-    tf = tok.groupBy(id_col, "term").agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    n = docs.count()
-    scored = tf.join(dfreq, "term").withColumn(
-        "score",
-        F.round(
-            F.col("tf").cast("double")
-            * F.log(F.lit(float(n)) / F.col("df").cast("double")),
-            4,
-        ),
-    )
+    scored = _tfidf(docs, text, id_col).withColumn("score", F.round("w", 4))
     w = Window.partitionBy(id_col).orderBy(F.desc("score"), F.asc("term"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -2597,61 +2591,59 @@ def lexical_topk(
     :func:`tfidf_top_terms` weighting; the classic SMART/BM25-family
     baseline before length normalization).  The lexical mirror of
     :func:`cosine_topk`, and the second leg :func:`rrf_fuse` combines.
-
-    Determinism: tf/df/N are exact integers; per-term products fold in
-    ascending-term order from a 0.0 seed (sorted-fold IEEE twin), the
-    fold rounds to 4dp and the top-k window orders by the ROUNDED score
-    (then doc_id) so rank boundaries are engine-independent.
-
-    Scale shape: matches sparse-retrieval practice — a term-keyed join of
-    the query postings (n_queries * terms, broadcast-sized) against the
-    corpus postings, never doc x doc; Zipf-hot terms are AQE-skew-split
-    territory and stopword pre-filtering (idf ~ 0 contributes nothing)
-    is the documented pruning lever.
+    tf/df/N are exact integers; the fold, round and ranking are
+    :func:`_term_dot_topk`'s.
     """
-    tok = docs.select(F.col(id_col), F.explode(tokens_col(text)).alias("term"))
-    tf = tok.groupBy(id_col, "term").agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    n = docs.count()
-    wts = tf.join(dfreq, "term").select(
-        id_col,
-        "term",
-        (
-            F.col("tf").cast("double")
-            * F.log(F.lit(float(n)) / F.col("df").cast("double"))
-        ).alias("w"),
-    )
+    wts = _tfidf(docs, text, id_col).select(id_col, "term", F.col("w").alias("wd"))
     qw = wts.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"), "term", F.col("w").alias("wq")
+        F.col(id_col).alias("query_id"), "term", F.col("wd").alias("wq")
     )
+    return _term_dot_topk(qw, wts, k, id_col)
+
+
+def _term_dot_topk(
+    qw: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    id_col: str,
+    adjust: Callable[[DataFrame], DataFrame] | None = None,
+) -> DataFrame:
+    """(query_id, id_col, score, rank) — the scoring tail shared by
+    :func:`lexical_topk`, :func:`bm25_topk` and :func:`ql_topk`.
+
+    ``qw`` (query_id, term, wq), the query postings (n_queries * terms,
+    broadcast-sized), joins the corpus postings ``corpus`` (id_col, term,
+    wd) on term — never doc x doc; Zipf-hot terms are AQE-skew-split
+    territory and stopword pre-filtering (idf ~ 0 contributes nothing)
+    is the pruning lever.  A query never scores itself.  Per pair the
+    wq*wd products fold in ascending-term order from a 0.0 seed (the
+    sorted-fold IEEE twin); ``adjust`` maps that (query_id, id_col,
+    score) fold to the same columns with the raw score adjusted (ql_topk's
+    length part).  The score rounds to 4dp and the per-query window ranks
+    by the ROUNDED score, then ascending id, so rank boundaries are
+    engine-independent.
+    """
     pairs = (
         F.broadcast(qw)
-        .join(wts.withColumnRenamed("w", "wd"), "term")
+        .join(corpus, "term")
         .filter(F.col("query_id") != F.col(id_col))
-        .select(
-            "query_id",
-            id_col,
-            "term",
-            (F.col("wq") * F.col("wd")).alias("p"),
-        )
+        .select("query_id", id_col, "term", (F.col("wq") * F.col("wd")).alias("p"))
     )
     agg = pairs.groupBy("query_id", id_col).agg(
-        F.round(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("term", "p"))),
-                F.lit(0.0),
-                lambda acc, s: acc + s["p"],
-            ),
-            4,
+        F.aggregate(
+            F.sort_array(F.collect_list(F.struct("term", "p"))),
+            F.lit(0.0),
+            lambda acc, s: acc + s["p"],
         ).alias("score")
     )
+    if adjust is not None:
+        agg = adjust(agg)
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc(id_col))
     return (
-        agg.withColumn("rank", F.row_number().over(w))
+        agg.select("query_id", id_col, F.round("score", 4).alias("score"))
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(
-            "query_id", id_col, "score", F.col("rank").cast("long").alias("rank")
-        )
+        .select("query_id", id_col, "score", F.col("rank").cast("long").alias("rank"))
     )
 
 
@@ -2911,19 +2903,15 @@ def token_entropy(
     state is the doc's OWN vocabulary (bounded by document size, the
     winnowing argument) — no corpus-wide state, no Python.
     """
-    tf = (
-        docs.select(F.col(id_col), F.explode(tokens_col(text)).alias("tok"))
-        .groupBy(id_col, "tok")
-        .agg(F.count("*").cast("long").alias("c"))
-    )
+    tf = term_postings(docs, text, id_col)
     lst = F.sort_array(
-        F.collect_list(F.struct(F.col("tok"), F.col("c").cast("double").alias("cd")))
+        F.collect_list(F.struct(F.col("term"), F.col("tf").cast("double").alias("cd")))
     )
     fold = F.aggregate(
         lst, F.lit(0.0), lambda a, s: a + s["cd"] * F.log2(s["cd"])
     )
     per = tf.groupBy(id_col).agg(
-        F.sum("c").cast("long").alias("n_tokens"),
+        F.sum("tf").cast("long").alias("n_tokens"),
         F.count("*").cast("long").alias("n_types"),
         fold.alias("_s"),
     )
@@ -3438,16 +3426,11 @@ def bm25_topk(
     Determinism: tf/df/dl/N are exact integers; avgdl is ONE division
     (sum(dl)/N — not a float avg aggregate, whose summation order is
     engine-private); constants are emitted from the same Python doubles
-    the twin's literals round-trip to; per-term contributions fold in
-    ascending-term order from 0.0 and the fold rounds to 4dp; ranks
-    order by the ROUNDED score then doc_id.
-
-    Shape at scale: identical to lexical_topk — query postings broadcast
-    against corpus postings keyed by term (never doc x doc); dl/avgdl
-    ride along as a scan-side projection + one broadcast scalar.
+    the twin's literals round-trip to; the fold, round and ranking are
+    :func:`_term_dot_topk`'s.  dl/avgdl ride along as a scan-side
+    projection + one broadcast scalar.
     """
-    tok = docs.select(F.col(id_col), F.explode(tokens_col(text)).alias("term"))
-    tf = tok.groupBy(id_col, "term").agg(F.count(F.lit(1)).cast("long").alias("tf"))
+    tf = term_postings(docs, text, id_col)
     dl = tf.groupBy(id_col).agg(F.sum("tf").cast("long").alias("dl"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
     n = docs.count()
@@ -3481,32 +3464,9 @@ def bm25_topk(
     qw = tf.filter(F.col(id_col) < n_queries).select(
         F.col(id_col).alias("query_id"),
         "term",
-        F.col("tf").cast("double").alias("qtf"),
+        F.col("tf").cast("double").alias("wq"),
     )
-    pairs = (
-        F.broadcast(qw)
-        .join(corpus, "term")
-        .filter(F.col("query_id") != F.col(id_col))
-        .select(
-            "query_id", id_col, "term", (F.col("qtf") * F.col("wd")).alias("p")
-        )
-    )
-    agg = pairs.groupBy("query_id", id_col).agg(
-        F.round(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("term", "p"))),
-                F.lit(0.0),
-                lambda acc, s: acc + s["p"],
-            ),
-            4,
-        ).alias("score")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        agg.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "score", F.col("rank").cast("long").alias("rank"))
-    )
+    return _term_dot_topk(qw, corpus, k, id_col)
 
 
 SEMDEDUP_K = 8
@@ -3542,7 +3502,7 @@ def semdedup_pairs(
     """
     import math
 
-    from lightrag_spark.operators.ann import _cosine, cosine_arrow
+    from lightrag_spark.operators.ann import cosine_arrow
     from lightrag_spark.operators.ivf import assign_nearest_centroid
 
     if k is None:
@@ -3909,11 +3869,7 @@ def mmr_topk(
             "query_id",
             "a",
             "b",
-            F.round(
-                _dot(F.col("va"), F.col("vb"))
-                / (_norm(F.col("va")) * _norm(F.col("vb"))),
-                4,
-            ).alias("psim"),
+            _cosine(F.col("va"), F.col("vb")).alias("psim"),
         )
         .localCheckpoint(eager=True)
     )
@@ -4823,13 +4779,11 @@ def ql_topk(
     the classic 2000 assumes multi-hundred-word documents, these are
     ~100 words.
 
-    Determinism contract identical to bm25_topk: integer counts, scalar
-    C collected once, per-term contributions folded in ascending-term
-    order from 0.0, the length part added after the fold, one round(4);
-    ranks order by rounded score then doc_id.
+    Determinism: integer counts, scalar C collected once, the length
+    part subtracted after :func:`_term_dot_topk`'s fold and before its
+    one round(4).
     """
-    tok = docs.select(F.col(id_col), F.explode(tokens_col(text)).alias("term"))
-    tf = tok.groupBy(id_col, "term").agg(F.count(F.lit(1)).cast("long").alias("tf"))
+    tf = term_postings(docs, text, id_col)
     dl = tf.groupBy(id_col).agg(F.sum("tf").cast("long").alias("dl"))
     ctf = tf.groupBy("term").agg(F.sum("tf").cast("long").alias("ctf"))
     c_total = dl.agg(F.sum("dl")).collect()[0][0]
@@ -4847,44 +4801,23 @@ def ql_topk(
     qw = tf.filter(F.col(id_col) < n_queries).select(
         F.col(id_col).alias("query_id"),
         "term",
-        F.col("tf").cast("double").alias("qtf"),
+        F.col("tf").cast("double").alias("wq"),
     )
     qlen = dl.filter(F.col(id_col) < n_queries).select(
         F.col(id_col).alias("query_id"), F.col("dl").cast("double").alias("qlen")
     )
-    pairs = (
-        F.broadcast(qw)
-        .join(corpus, "term")
-        .filter(F.col("query_id") != F.col(id_col))
-        .select(
-            "query_id", id_col, "term", (F.col("qtf") * F.col("wd")).alias("p")
-        )
-    )
-    folded = pairs.groupBy("query_id", id_col).agg(
-        F.aggregate(
-            F.sort_array(F.collect_list(F.struct("term", "p"))),
-            F.lit(0.0),
-            lambda acc, s: acc + s["p"],
-        ).alias("sf")
-    )
     lenpart = F.col("qlen") * F.log(
         (F.col("dl").cast("double") + F.lit(float(mu))) / F.lit(float(mu))
     )
-    agg = (
-        folded.join(dl, id_col)
-        .join(F.broadcast(qlen), "query_id")
-        .select(
-            "query_id",
-            id_col,
-            F.round(F.col("sf") - lenpart, 4).alias("score"),
+
+    def minus_length(folded: DataFrame) -> DataFrame:
+        return (
+            folded.join(dl, id_col)
+            .join(F.broadcast(qlen), "query_id")
+            .select("query_id", id_col, (F.col("score") - lenpart).alias("score"))
         )
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        agg.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "score", F.col("rank").cast("long").alias("rank"))
-    )
+
+    return _term_dot_topk(qw, corpus, k, id_col, adjust=minus_length)
 
 
 ATTRIB_CONVERSION = "purchase"

@@ -20,8 +20,6 @@ either the second or an upsert into the stored graph.
 
 from __future__ import annotations
 
-import os
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -137,14 +135,6 @@ def release(*dfs) -> None:
                 leaf.rdd().unpersist(False)
 
 
-def _tick(label: str, t0: float) -> float:
-    """Phase timer, printed when SPARK_KG_DEBUG_TIMING=1 (bench_extra.py
-    phases)."""
-    if os.environ.get("SPARK_KG_DEBUG_TIMING") == "1":
-        print(f"[kg_build] {label}: {time.time()-t0:.1f}s", flush=True)
-    return time.time()
-
-
 @dataclass
 class KGExtraction:
     """The extraction half of a build.  ``records`` is the full extractor
@@ -183,7 +173,6 @@ def extract_kg(
     of re-calling the model (the resume primitive, SURVEY.md §3.3).
     """
     cfg = cfg or KGBuildConfig()
-    _t = time.time()
     par = cfg.parallelism or docs.sparkSession.sparkContext.defaultParallelism * 2
     # Spread documents across workers for the chunking UDF (narrow transform
     # — inherits input partitioning otherwise), then re-spread chunks for the
@@ -242,9 +231,7 @@ def extract_kg(
         # first-touch of an unmaterialized cache races — every async job
         # recomputes the whole extraction subtree (observed 4-5x extraction
         # cost at local[32]).  One count pins the cache before the fan-out.
-        _t = _tick("plan", _t)
         records.count()
-        _t = _tick("records.count (chunk+extract)", _t)
     mentions, triples, cache = split_records(records)
     if cfg.cache_records:
         # Pin the NARROW splits too: records.description also carries the
@@ -256,7 +243,6 @@ def extract_kg(
         # both read the already-materialized records cache, so concurrent
         # first-touch is safe and the two jobs overlap.
         mentions, triples = checkpoint_concurrently([mentions, triples])
-        _t = _tick("mentions+triples checkpoints (concurrent)", _t)
     return KGExtraction(
         chunks=chunks, records=records, mentions=mentions, triples=triples, llm_cache=cache
     )
@@ -268,7 +254,6 @@ def merge_kg(
     """mentions + triples -> (kg_nodes, kg_edges): the salted merges, the
     description summaries, UNKNOWN endpoints and degrees."""
     cfg = cfg or KGBuildConfig()
-    _t = time.time()
     nodes = merge_entity_nodes(
         mentions, salts=cfg.merge_salts, max_fragments=cfg.max_description_fragments
     )
@@ -287,7 +272,6 @@ def merge_kg(
         # not data volume, at bench scale).
         edges, nodes = checkpoint_concurrently([edges, nodes])
         merged = [nodes, edges]
-        _t = _tick("edges+nodes merges (concurrent checkpoint)", _t)
 
     if cfg.summarize:
         from pyspark.sql import functions as F
@@ -318,7 +302,6 @@ def merge_kg(
         nodes, edges = checkpoint_concurrently([nodes, edges])
         # the finals' lineage is truncated: nothing reads the merge pins now
         release(*merged)
-        _t = _tick("final nodes+edges (concurrent checkpoint)", _t)
     return nodes, edges
 
 

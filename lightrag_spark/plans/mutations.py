@@ -20,14 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extraction import extract_records, split_records
-from ..operators.merge import (
-    finish_graph,
-    merge_entity_nodes,
-    merge_relation_edges,
-    with_degrees,
-)
-from ..operators.summary import finalize_descriptions
-from .kg_build import KGBuildConfig
+from ..operators.merge import with_degrees
+from .kg_build import KGBuildConfig, checkpoint_concurrently, merge_kg, release
 
 
 def rebuild_kg_from_chunks(
@@ -39,7 +33,10 @@ def rebuild_kg_from_chunks(
     """(surviving chunks, cache) -> (kg_nodes, kg_edges), zero model calls.
 
     The chunk rows must carry (chunk_id, content, file_path, doc_order,
-    chunk_order_index) — the cache join re-parses stored responses.
+    chunk_order_index) — the cache join re-parses stored responses.  The
+    merge half is the build's ``merge_kg``; under ``cfg.cache_records`` the
+    returned finals are pinned (release them with ``kg_build.release``)
+    and nothing else stays pinned.
     """
     cfg = cfg or KGBuildConfig()
     pivoted = llm_cache.groupBy("chunk_id").agg(
@@ -55,6 +52,8 @@ def rebuild_kg_from_chunks(
         model_corruption=cfg.model_corruption,
         emit_cache_rows=False,
         model_call_counter=model_call_counter,
+        max_extract_input_tokens=cfg.max_extract_input_tokens,
+        tokenizer_kind=cfg.tokenizer_kind,
     )
     if cfg.cache_records:
         # Same contract as build_kg: the salted merges fan out into several
@@ -67,37 +66,16 @@ def rebuild_kg_from_chunks(
         records.count()
     mentions, triples, _ = split_records(records)
     if cfg.cache_records:
-        from pyspark.storagelevel import StorageLevel
-
-        from .kg_build import checkpoint_concurrently
-
         # disjoint reads of the materialized records cache — safe to
         # first-touch concurrently; checkpoint (not persist) truncates
         # the rebuild DAG out of the merge consumers' plans
         mentions, triples = checkpoint_concurrently([mentions, triples])
-    nodes = merge_entity_nodes(
-        mentions, salts=cfg.merge_salts, max_fragments=cfg.max_description_fragments
-    )
-    edges = merge_relation_edges(
-        triples, salts=cfg.merge_salts, max_fragments=cfg.max_description_fragments
-    )
+    nodes, edges = merge_kg(mentions, triples, cfg)
     if cfg.cache_records:
-        # Same contract as build_kg: the merged edge table fans into the
-        # unknown-endpoints anti-join and BOTH degree joins — without a
-        # materialized pin each consumer replays the whole two-phase edge
-        # aggregation inside the caller's single action.  localCheckpoint
-        # (not persist) so the consumer's plan is a LogicalRDD scan, not
-        # the whole rebuild DAG (see kg_build's finals note).
-        from .kg_build import checkpoint_concurrently
-
-        nodes, edges = checkpoint_concurrently([nodes, edges])
-    if cfg.summarize:
-        nodes = finalize_descriptions(nodes, "entity_name", "Entity", cfg.tokenizer_kind)
-        edges = edges.withColumn(
-            "_pair", F.concat(F.lit("("), "src", F.lit(", "), "tgt", F.lit(")"))
-        )
-        edges = finalize_descriptions(edges, "_pair", "Relation", cfg.tokenizer_kind).drop("_pair")
-    return finish_graph(nodes, edges)
+        # merge_kg checkpointed the finals: nothing reads these pins now
+        release(mentions, triples)
+        records.unpersist()
+    return nodes, edges
 
 
 def delete_documents(
@@ -135,6 +113,7 @@ def delete_documents(
         shutil.rmtree(status_path)
         os.rename(status_path + ".new", status_path)
 
+    release(nodes, edges)
     surviving.unpersist()
     return {
         "deleted_docs": len(doc_ids),

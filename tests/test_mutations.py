@@ -7,14 +7,16 @@ document — with zero model calls during the rebuild.
 
 from __future__ import annotations
 
-from lightrag_spark.plans.kg_build import KGBuildConfig
+from lightrag_spark.plans.kg_build import KGBuildConfig, build_kg
 from lightrag_spark.plans.mutations import (
     delete_documents,
     delete_entity,
     delete_relation,
+    rebuild_kg_from_chunks,
     rename_entity,
 )
 from lightrag_spark.plans.runner import run_indexing
+from lightrag_spark.sources.pages import enqueue_documents, synthesize_pages
 
 CFG = dict(
     tokenizer_kind="regex",
@@ -66,6 +68,48 @@ def test_delete_doc_equals_fresh_build_without_it(spark, tmp_path):
     run_indexing(spark, _docs(spark, [i for i in range(8) if i != 3]), fresh_out, cfg)
 
     assert _snapshot(spark, full_out) == _snapshot(spark, fresh_out)
+
+
+def _pinned(spark):
+    """(cached Datasets, ids of persisted RDDs) — checkpoints are persisted
+    RDDs, so together these are everything a call can leave pinned."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    return cm.numCachedEntries(), set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_delete_documents_cache_records_leaves_nothing_pinned(spark, tmp_path):
+    """cache_records: the rebuild releases its records, mention/triple and
+    merge pins, and delete_documents releases the finals after writing."""
+    cfg = KGBuildConfig(**CFG, cache_records=True)
+    out = str(tmp_path / "kg")
+    run_indexing(spark, _docs(spark, range(6)), out, cfg)
+    before = _pinned(spark)
+    res = delete_documents(spark, out, ["doc-002"], cfg)
+    assert res["model_calls"] == 0
+    assert _pinned(spark) == before
+
+
+def _rows(df):
+    cols = sorted(df.columns)
+    return sorted(repr([r[c] for c in cols]) for r in df.select(*cols).collect())
+
+
+def test_rebuild_honours_gleaning_budget(spark, tmp_path):
+    """The rebuild re-parses the cache under the build's gleaning budget
+    and tokenizer: chunks whose gleaning payload exceeded the budget have
+    no pass-1 response cached, so a rebuild with the default budget would
+    call the model for them and grow the graph."""
+    cfg = KGBuildConfig(max_gleaning=1, max_extract_input_tokens=300)
+    r = build_kg(enqueue_documents(synthesize_pages(spark, 10, seed=3)), cfg)
+    cache_path = str(tmp_path / "llm_cache")
+    r.llm_cache.write.parquet(cache_path)
+    counter = spark.sparkContext.accumulator(0)
+    nodes, edges = rebuild_kg_from_chunks(
+        r.chunks, spark.read.parquet(cache_path), cfg, counter
+    )
+    assert _rows(nodes) == _rows(r.kg_nodes)
+    assert _rows(edges) == _rows(r.kg_edges)
+    assert counter.value == 0
 
 
 def test_entity_edits(spark):

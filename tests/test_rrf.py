@@ -5,7 +5,15 @@ from __future__ import annotations
 
 import math
 
-from lightrag_spark.operators.datapipe import RRF_K, lexical_topk, rrf_fuse
+import pytest
+
+from lightrag_spark.operators.datapipe import (
+    RRF_K,
+    bm25_topk,
+    lexical_topk,
+    ql_topk,
+    rrf_fuse,
+)
 
 
 def _fuse(spark, rows, **kw):
@@ -71,3 +79,39 @@ def test_lexical_topk_contract(spark):
     idf2, idf4 = math.log(n / 2), math.log(n / 4)
     exp = round(idf2 * idf2 + idf2 * idf2 + (2 * idf4) * (1 * idf4), 4)
     assert by_doc[1].score == exp
+
+
+@pytest.mark.parametrize(
+    "scorer", [lexical_topk, bm25_topk, ql_topk], ids=lambda f: f.__name__
+)
+def test_term_scorer_tail_contract(spark, scorer):
+    """The scoring tail the three lexical scorers share: no query ranks
+    itself (its twins would otherwise tie it), ranks per query are 1..n
+    with n <= k and no gaps, and equal rounded scores order by ascending
+    doc id."""
+    docs = spark.createDataFrame(
+        [
+            (0, "alpha beta gamma"),
+            (1, "delta epsilon"),
+            (2, "alpha beta gamma"),  # twins of query 0: equal scores
+            (3, "alpha beta gamma"),
+            (4, "alpha zeta"),
+            (5, "gamma eta theta"),
+            (6, "delta"),             # query 1's only match: n = 1 < k
+            (7, "unrelated words"),
+        ],
+        "doc_id long, text string",
+    )
+    per = {}
+    for r in scorer(docs, n_queries=2, k=3).collect():
+        per.setdefault(r.query_id, []).append(r)
+    assert {q: len(rs) for q, rs in per.items()} == {0: 3, 1: 1}
+    for q, rs in per.items():
+        rs.sort(key=lambda r: r.rank)
+        assert all(r.doc_id != q for r in rs)
+        assert [r.rank for r in rs] == list(range(1, len(rs) + 1))
+        keys = [(-r.score, r.doc_id) for r in rs]
+        assert keys == sorted(keys)
+    twins = {r.doc_id: r for r in per[0] if r.doc_id in (2, 3)}
+    assert twins[2].score == twins[3].score
+    assert twins[2].rank < twins[3].rank
