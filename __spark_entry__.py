@@ -3084,19 +3084,21 @@ def _q_sim_label_centroids(spark, sf):
 def _hits_sql(iterations: int = _HITS_ITER, scale: int = _HITS_SCALE) -> str:
     """Unrolled-iteration HITS oracle chain over the typed_mentions CTE:
     alternating integer sum + L1 floor-normalization, mirroring
-    graphs.hits_bipartite exactly."""
+    graphs.hits_bipartite exactly.  Each raw-sum CTE is read twice (the
+    rows and their total), so it is MATERIALIZED: inlined, the chain
+    doubles per half-step and DuckDB spends minutes just binding it."""
     parts = [f"""
-, bi AS (SELECT DISTINCT chunk_id AS c, entity_name AS e FROM typed_mentions),
+, bi AS MATERIALIZED (SELECT DISTINCT chunk_id AS c, entity_name AS e FROM typed_mentions),
 h0 AS (SELECT DISTINCT c, {scale}::BIGINT AS h FROM bi)"""]
     for k in range(1, iterations + 1):
         parts.append(f""",
-a{k}r AS (
+a{k}r AS MATERIALIZED (
   SELECT e, sum(h)::BIGINT AS ar
   FROM bi JOIN h{k - 1} USING (c) GROUP BY e),
 a{k} AS (
   SELECT e, ((ar * {scale}) // (SELECT sum(ar) FROM a{k}r))::BIGINT AS a
   FROM a{k}r),
-h{k}r AS (
+h{k}r AS MATERIALIZED (
   SELECT c, sum(a)::BIGINT AS hr
   FROM bi JOIN a{k} USING (e) GROUP BY c),
 h{k} AS (
@@ -3626,8 +3628,10 @@ _NAME_BAND_STRUCTS = ", ".join(
     for b in range(lk.NAME_LSH_BANDS)
 )
 
+# CTEs read more than once are MATERIALIZED: inlined, DuckDB re-binds the
+# KG chain under them per read (15 s to EXPLAIN each linking oracle).
 _NAME_LINK_CTE = f"""
-, bstats AS (
+, bstats AS MATERIALIZED (
   SELECT mc.nm, coalesce(d.degree, 0)::BIGINT AS deg, mc.men
   FROM (SELECT entity_name AS nm, count(*)::BIGINT AS men
         FROM mentions GROUP BY 1) mc
@@ -3639,7 +3643,7 @@ twins AS (
     AND nm || 's' NOT IN (SELECT nm FROM bstats)),
 dnodes AS (SELECT * FROM bstats UNION ALL SELECT * FROM twins),
 names AS (SELECT nm FROM dnodes),
-nsh AS (
+nsh AS MATERIALIZED (
   SELECT nm, CASE WHEN len(nm) >= {lk.NAME_SHINGLE_N}
        THEN list_distinct(list_transform(
             generate_series(1, len(nm)-{lk.NAME_SHINGLE_N - 1}),
@@ -3649,7 +3653,7 @@ nsh AS (
 nsigs AS (SELECT nm, {_NAME_MH_COLS} FROM nsh),
 nbands AS (SELECT nm, unnest([{_NAME_BAND_STRUCTS}], recursive := true) FROM nsigs),
 nbsz AS (SELECT band_idx, bucket, count(*) AS _n FROM nbands GROUP BY 1, 2),
-npb AS (
+npb AS MATERIALIZED (
   SELECT b.* FROM nbands b
   JOIN nbsz s ON b.band_idx = s.band_idx AND b.bucket = s.bucket
   WHERE s._n <= {lk.NAME_MAX_BUCKET}),
@@ -3662,7 +3666,7 @@ npairs AS (
   FROM ncand c JOIN nsh sa ON sa.nm = c.nm_a JOIN nsh sb ON sb.nm = c.nm_b
   WHERE len(list_intersect(sa.sh, sb.sh))::DOUBLE
         / len(list_distinct(list_concat(sa.sh, sb.sh))) >= {lk.NAME_LINK_THRESHOLD}),
-nund AS (
+nund AS MATERIALIZED (
   SELECT nm_a AS a, nm_b AS b FROM npairs
   UNION
   SELECT nm_b AS a, nm_a AS b FROM npairs),
@@ -3670,7 +3674,7 @@ nreach AS (
   SELECT a AS node, a AS lbl FROM nund
   UNION
   SELECT e.b AS node, r.lbl FROM nreach r JOIN nund e ON e.a = r.node),
-ncomp AS (SELECT node, min(lbl) AS component FROM nreach GROUP BY node),
+ncomp AS MATERIALIZED (SELECT node, min(lbl) AS component FROM nreach GROUP BY node),
 nstats AS (SELECT nm AS node, men, deg FROM dnodes),
 ncanon AS (
   SELECT component, node AS canonical_name FROM (

@@ -1,34 +1,12 @@
-"""Distributed connected components — the clustering step of dedup.
+"""Graph operators over undirected edge lists — the KG (``kg_edges``,
+undirected as in the reference's NetworkX storage) and the near-dup pair
+graph: components, PageRank/PPR, LPA, k-core, k-truss, HITS, triangles,
+link prediction, walks and degree statistics, each hash-gated against a
+DuckDB twin in ``__spark_entry__``.
 
-Near-duplicate detection emits PAIRS; deduplication needs GROUPS (every
-doc mapped to one canonical representative).  That closure is a connected
-components problem: docs are nodes, near-dup pairs are edges, a component
-is a duplicate cluster, and the canonical doc is the component minimum.
-
-Algorithm: min-label propagation over DataFrames — each node's label is
-the smallest node id it has seen; one round is a join of labels onto the
-(undirected) edge list plus a min-aggregate; convergence when no label
-changes.  Rounds = O(component diameter).  Near-dup clusters have tiny
-diameters by construction (members are all pairwise-similar to a common
-core), so a handful of rounds closes them; for general deep graphs the
-alternating large-star/small-star scheme (Kiveris et al., "Connected
-Components in MapReduce", SoCC'14) halves round counts — documented here
-as the swap-in if this operator is ever pointed at path-shaped graphs.
-
-Each round CHECKPOINTS the new labels (localCheckpoint, eager) — persist
-alone is NOT enough for iterative algorithms: it caches the data but the
-logical plan still nests one join/union/groupBy deeper per round, and
-Catalyst re-optimizes the whole tree each iteration (a 12-round chain
-OOM'd the driver on plan growth with persist-only; checkpointing
-truncates the lineage and the same chain closes instantly).  On a real
-cluster prefer ``spark.sparkContext.setCheckpointDir`` + ``checkpoint()``
-for fault-tolerant truncation; localCheckpoint trades executor-loss
-recovery for speed, the right call in this sandbox.
-
-The DuckDB oracle replays the same fixpoint with a recursive CTE
-(transitive min over reachability), so the operator is hash-gated like
-every non-iterative one — one of the few iterative algorithms where the
-oracle stays exactly expressible.
+Shared mechanisms: :func:`_undirected` (the twins' ``SELECT src, tgt
+UNION SELECT tgt, src``), :func:`_iterate` (the one round loop) and
+:func:`_orient` / :func:`_triangles` (the degree-ordered triangle kernel).
 """
 
 from __future__ import annotations
@@ -37,13 +15,119 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 
-# Driver union-find bound for connected_components' small-graph path: a
-# pair graph of <=100k edges is a few MB collected — far below the
+# Driver union-find bound for connected_components' small-graph path,
+# counted in rows of the deduplicated both-orientation edge list (so it
+# admits ~50k undirected pairs): a few MB collected — far below the
 # driver-side budgets this repo already accepts (KMeans codebooks, packing
 # prefix sums) — while the distributed min-label loop would spend 2 jobs
 # per round on it.  Same philosophy as Spark's broadcast-join threshold:
 # the distributed path engages automatically past the bound.
 CC_DRIVER_MAX_EDGES = 100_000
+
+
+def _undirected(edges: DataFrame, src: str, tgt: str) -> DataFrame:
+    """(u, v) — every edge in both orientations, deduplicated: the
+    undirected neighbor list.  Callers that drop self-loops filter
+    ``edges`` first."""
+    return (
+        edges.select(F.col(src).alias("u"), F.col(tgt).alias("v"))
+        .union(edges.select(F.col(tgt).alias("u"), F.col(src).alias("v")))
+        .distinct()
+    )
+
+
+def _iterate(state: DataFrame, step, *, name: str, rounds: int | None = None,
+             max_iter: int | None = None, key: str | None = None,
+             value: str | None = None, on_round=None) -> DataFrame:
+    """The round loop of every iterative operator: ``state = step(state)``.
+
+    Lineage rule: each round's output is localCheckpointed eagerly.
+    persist alone is NOT enough: it caches the data but the logical plan
+    still nests one join/aggregate deeper per round and Catalyst
+    re-optimizes the whole tree each iteration (a 12-round chain OOM'd the
+    driver on plan growth; checkpointing closes it instantly).  On a real
+    cluster ``checkpoint()`` to a checkpoint dir adds executor-loss
+    recovery at a speed cost.
+
+    ``rounds=K`` runs exactly K rounds (the form the DuckDB twins unroll as
+    K CTEs), calling ``on_round(k, None)``.  Otherwise it runs to the
+    observed fixed point — one extra confirming round, so ``max_iter``
+    must exceed the depth by one — calling ``on_round(k, changed)`` and
+    raising past ``max_iter``.  With ``value``, the old value is joined on
+    ``key`` into the round's checkpoint and ``changed`` is a filter over
+    it (no second join job); without, the state must shrink monotonically
+    and ``changed`` is the number of rows dropped.
+    """
+    if rounds is not None:
+        for k in range(rounds):
+            state = step(state).localCheckpoint(eager=True)
+            if on_round is not None:
+                on_round(k, None)
+        return state
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
+    n = state.count() if value is None else None
+    changed = -1
+    for k in range(max_iter):
+        if value is None:
+            state = step(state).localCheckpoint(eager=True)
+            m = state.count()
+            changed, n = n - m, m
+        else:
+            nxt = (
+                step(state)
+                .join(state.select(key, F.col(value).alias("_old")), key)
+                .localCheckpoint(eager=True)
+            )
+            changed = nxt.filter(F.col(value) != F.col("_old")).count()
+            state = nxt.drop("_old")
+        if on_round is not None:
+            on_round(k, changed)
+        if changed == 0:
+            return state
+    raise RuntimeError(
+        f"{name} did not converge in {max_iter} rounds "
+        f"({changed} still changing) — raise max_iter"
+    )
+
+
+def _orient(e: DataFrame, deg: DataFrame) -> DataFrame:
+    """(lo, hi, dhi) — each edge (a, b) of ``e`` pointed from its
+    (degree, name)-smaller endpoint to the larger (Suri & Vassilvitskii,
+    "Counting Triangles and the Curse of the Last Reducer", WWW'11);
+    ``deg`` is (node, degree).  Every wedge then sits at its lowest-degree
+    apex, so each triangle is enumerated once and out-degree is O(sqrt(m))
+    however skewed the degrees — a hub generates NO wedges.  Checkpointed:
+    :func:`_triangles` reads it three times."""
+    node, d = deg.columns
+    g = e.join(
+        deg.select(F.col(node).alias("a"), F.col(d).alias("da")), "a"
+    ).join(deg.select(F.col(node).alias("b"), F.col(d).alias("db")), "b")
+    fwd = (F.col("da") < F.col("db")) | (
+        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
+    )
+    return g.select(
+        F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("lo"),
+        F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("hi"),
+        F.when(fwd, F.col("db")).otherwise(F.col("da")).alias("dhi"),
+    ).localCheckpoint(eager=True)
+
+
+def _triangles(oriented: DataFrame) -> DataFrame:
+    """(n1, n2, n0) — each triangle of an :func:`_orient` edge set once:
+    wedges n0 -> n1, n0 -> n2 (n1 before n2 in (degree, name) order)
+    closed by the edge n1 -> n2."""
+    x, y = oriented.alias("x"), oriented.alias("y")
+    hi_order = (F.col("x.dhi") < F.col("y.dhi")) | (
+        (F.col("x.dhi") == F.col("y.dhi")) & (F.col("x.hi") < F.col("y.hi"))
+    )
+    wedges = x.join(y, (F.col("x.lo") == F.col("y.lo")) & hi_order).select(
+        F.col("x.lo").alias("n0"),
+        F.col("x.hi").alias("n1"),
+        F.col("y.hi").alias("n2"),
+    )
+    closing = oriented.select(F.col("lo").alias("n1"), F.col("hi").alias("n2"))
+    return wedges.join(closing, ["n1", "n2"])
 
 
 def _driver_union_find(rows, a_key: str, b_key: str) -> list[tuple]:
@@ -86,92 +170,67 @@ def connected_components(
     on_round=None,
     driver_max_edges: int | None = None,
 ) -> DataFrame:
-    """(node, component) — component = min node id reachable via edges.
+    """(node, component) — component = min node id reachable via edges:
+    the dedup closure (near-dup pairs -> clusters, canonical doc = the
+    component minimum).  ``edges`` is undirected input (each pair listed
+    once is enough); only nodes that appear in edges are returned.
 
-    ``edges`` is undirected input (each pair listed once is enough).
-    Only nodes that appear in edges are returned (isolated nodes are the
-    caller's concern — they are their own components by definition).
+    Min-label propagation: one round joins labels onto the undirected
+    edge list and min-aggregates; rounds = O(component diameter), a
+    handful for near-dup clusters.  For path-shaped graphs the
+    large-star/small-star scheme (Kiveris et al., SoCC'14) is the
+    swap-in.  The DuckDB twin replays the fixpoint with a recursive CTE.
+    Fails LOUD (RuntimeError) if ``max_iter`` rounds exhaust while labels
+    still change, rather than return wrong canonical ids.
 
-    Fails LOUD on non-convergence: if ``max_iter`` rounds exhaust while
-    labels are still changing (a deep/path-shaped component — exactly the
-    case the module docstring anticipates), a RuntimeError is raised
-    rather than silently returning wrong canonical ids.  Raise
-    ``max_iter`` or switch to the large-star/small-star variant for such
-    graphs.
+    ``on_round``: optional ``(round_index, labels_changed)`` callback per
+    round — convergence observability for scale probes and tests.
 
-    ``on_round``: optional callable ``(round_index, labels_changed)``
-    invoked after each propagation round — convergence observability for
-    scale probes (the sf10 measurement in BENCH.md uses it) and tests.
+    ``driver_max_edges``: opt-in small-graph path (ignored when
+    ``on_round`` is set): when the deduplicated edge list in BOTH
+    orientations has at most this many rows — about half as many
+    undirected pairs — a driver union-find replaces the loop.
     """
-    und = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-    und = und.distinct().localCheckpoint(eager=True)
+    und = _undirected(edges, src, dst).localCheckpoint(eager=True)
 
     if driver_max_edges is not None and on_round is None:
-        # Small-graph path (opt-in per call site): exact driver union-find
-        # when the DEDUPED edge list fits the bound — the count and the
-        # collect both read the checkpoint.  Semantics identical (min-label
-        # components; Python str ordering == UTF-8 binary ordering, the
-        # same total order F.min uses); the convergence/max_iter contract
-        # of the distributed loop applies only past the bound.
+        # The count and the collect both read the checkpoint.  Semantics
+        # identical (min-label components; Python str ordering == UTF-8
+        # binary ordering, the same total order F.min uses); the
+        # convergence/max_iter contract applies only past the bound.
         from pyspark.sql.types import StructField, StructType
 
         if und.count() <= driver_max_edges:
-            node_t = und.schema["a"].dataType
+            node_t = und.schema["u"].dataType
             spark = und.sparkSession
             out_schema = StructType(
                 [StructField("node", node_t), StructField("component", node_t)]
             )
             return spark.createDataFrame(
-                _driver_union_find(und.collect(), "a", "b"), out_schema
+                _driver_union_find(und.collect(), "u", "v"), out_schema
             )
 
     labels = (
-        und.select(F.col("a").alias("node"))
+        und.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
         .localCheckpoint(eager=True)
     )
 
-    if max_iter < 1:
-        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    # Convergence is only observable via one extra confirming round, so
-    # max_iter must exceed the propagation depth by one.
-    changed = -1
-    for _round in range(max_iter):
-        # neighbour minimum in one round: labels of b flow to a.  The old
-        # label rides along INTO the round's checkpoint so the convergence
-        # count is a trivial filter over the checkpointed frame — the
-        # previous shape paid a second join job (prop x old labels) per
-        # round just to count changes.
-        prop = (
-            und.join(labels.withColumnRenamed("node", "b"), "b")
-            .select(F.col("a").alias("node"), "component")
+    def _propagate(labels: DataFrame) -> DataFrame:
+        # neighbour minimum in one round: labels of v flow to u
+        return (
+            und.join(labels.withColumnRenamed("node", "v"), "v")
+            .select(F.col("u").alias("node"), "component")
             .union(labels.select("node", "component"))
             .groupBy("node")
             .agg(F.min("component").alias("component"))
-            .join(
-                labels.select(
-                    "node", F.col("component").alias("_old")
-                ),
-                "node",
-            )
-            .localCheckpoint(eager=True)
         )
-        changed = prop.filter(F.col("component") != F.col("_old")).count()
-        labels = prop.select("node", "component")
-        if on_round is not None:
-            on_round(_round, changed)
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing) — raise max_iter or use a "
-            "large-star/small-star scheme for deep graphs"
-        )
-    return labels
+
+    return _iterate(
+        labels, _propagate, name="connected_components", max_iter=max_iter,
+        key="node", value="component", on_round=on_round,
+    )
 
 
 def duplicate_components(
@@ -236,8 +295,7 @@ def pagerank_fixedpoint(
     Nodes = edge endpoints (degree >= 1 by construction; isolated nodes
     are the callers' concern, as in connected_components).  Each round is
     one join + one map-side-combinable sum keyed by neighbor — the same
-    shuffle shape as one CC round — and is localCheckpointed to truncate
-    lineage (the module-docstring lesson).  N is a driver-side scalar
+    shuffle shape as one CC round.  N is a driver-side scalar
     count (bounded, like the KMeans codebooks).  Overflow headroom:
     num * SUM contrib <= num * scale ~ 8.5e13 << 2^63.
     """
@@ -271,8 +329,8 @@ def pagerank_fixedpoint(
         )
     r0 = scale // n
     teleport = ((damping_den - damping_num) * r0) // damping_den
-    ranks = deg.select("u", F.lit(r0).cast("long").alias("r"))
-    for _ in range(iterations):
+
+    def _step(ranks: DataFrame) -> DataFrame:
         contrib = (
             ranks.join(deg, "u")
             .join(und, "u")
@@ -280,7 +338,7 @@ def pagerank_fixedpoint(
             .groupBy("v")
             .agg(F.sum("c").alias("s"))
         )
-        ranks = (
+        return (
             deg.select("u")
             .join(contrib.withColumnRenamed("v", "u"), "u", "left")
             .select(
@@ -290,8 +348,12 @@ def pagerank_fixedpoint(
                     + F.expr(f"({damping_num} * coalesce(s, 0)) DIV {damping_den}")
                 ).cast("long").alias("r"),
             )
-            .localCheckpoint(eager=True)
         )
+
+    ranks = _iterate(
+        deg.select("u", F.lit(r0).cast("long").alias("r")), _step,
+        name="pagerank_fixedpoint", rounds=iterations,
+    )
     return ranks.select(
         F.col("u").alias("node"),
         F.col("r").alias("rank_fp"),
@@ -375,18 +437,11 @@ def triangle_counts(
     with near-zero clustering is a hub/disambiguation page; a dense
     egonet is a real topical cluster).
 
-    Degree-ordered orientation (the canonical distributed algorithm —
-    cf. Suri & Vassilvitskii, "Counting Triangles and the Curse of the
-    Last Reducer", WWW'11): each edge points from its (degree, name)-
-    smaller endpoint to the larger, so every wedge is generated at its
-    lowest-degree apex and each triangle is enumerated exactly once.
-    Out-degree after orientation is O(sqrt(m)) regardless of how skewed
-    the raw degree distribution is — the hub that would explode a naive
-    wedge join generates NO wedges (all its edges point outward-in),
-    which is precisely the last-reducer fix.  All joins are equi-joins
-    on node keys; counts are exact integers; the coefficient is one
-    integer-to-double division rounded to 4dp (IEEE-identical in the
-    DuckDB twin, ``queries[kg_triangles]``).
+    Triangles come from the shared degree-ordered kernel
+    (:func:`_orient` + :func:`_triangles`, the last-reducer fix).  All
+    joins are equi-joins on node keys; counts are exact integers; the
+    coefficient is one integer-to-double division rounded to 4dp
+    (IEEE-identical in the DuckDB twin, ``queries[kg_triangles]``).
     """
     e = (
         edges.select(F.col(src).alias("a"), F.col(tgt).alias("b"))
@@ -401,31 +456,7 @@ def triangle_counts(
         .select(F.col("a").alias("node"), F.col("d").cast("long").alias("degree"))
         .localCheckpoint(eager=True)
     )
-    g = e.join(
-        deg.select(F.col("node").alias("a"), F.col("degree").alias("da")), "a"
-    ).join(deg.select(F.col("node").alias("b"), F.col("degree").alias("db")), "b")
-    fwd = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-    )
-    # oriented is read three times (both wedge sides + the closing probe);
-    # checkpoint so the join/degree subtree runs once, not per consumer —
-    # the pagerank/LPA per-round pattern.
-    oriented = g.select(
-        F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("lo"),
-        F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("hi"),
-        F.when(fwd, F.col("db")).otherwise(F.col("da")).alias("dhi"),
-    ).localCheckpoint(eager=True)
-    x, y = oriented.alias("x"), oriented.alias("y")
-    hi_order = (F.col("x.dhi") < F.col("y.dhi")) | (
-        (F.col("x.dhi") == F.col("y.dhi")) & (F.col("x.hi") < F.col("y.hi"))
-    )
-    wedges = x.join(y, (F.col("x.lo") == F.col("y.lo")) & hi_order).select(
-        F.col("x.lo").alias("n0"),
-        F.col("x.hi").alias("n1"),
-        F.col("y.hi").alias("n2"),
-    )
-    closing = oriented.select(F.col("lo").alias("n1"), F.col("hi").alias("n2"))
-    tri = wedges.join(closing, ["n1", "n2"])
+    tri = _triangles(_orient(e, deg))
     per = (
         tri.select(F.explode(F.array("n0", "n1", "n2")).alias("node"))
         .groupBy("node")
@@ -469,31 +500,31 @@ def label_propagation(
     Each round is one join (labels onto neighbor lists) + one
     map-side-combinable (node, label) count + a top-1 window on the node
     (Catalyst inserts WindowGroupLimit, so the shuffle carries only
-    per-(node,label) partials, never raw neighbor rows), and is
-    localCheckpointed to truncate lineage — same per-round shape and
-    cost as one CC round.
+    per-(node,label) partials, never raw neighbor rows) — same per-round
+    shape and cost as one CC round.  Self-loops are dropped, as in the
+    twin.
     """
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    und = (
-        edges.select(F.col(src).alias("u"), F.col(tgt).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .union(edges.select(F.col(tgt).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = und.select("u").distinct().select(F.col("u").alias("node"), F.col("u").alias("lbl"))
+    und = _undirected(
+        edges.filter(F.col(src) != F.col(tgt)), src, tgt
+    ).localCheckpoint(eager=True)
     w = Window.partitionBy("node").orderBy(F.desc("cnt"), F.asc("lbl"))
-    for _ in range(iterations):
-        labels = (
+
+    def _adopt(labels: DataFrame) -> DataFrame:
+        return (
             und.join(labels.withColumnRenamed("node", "v"), "v")
             .groupBy(F.col("u").alias("node"), "lbl")
             .agg(F.count(F.lit(1)).alias("cnt"))
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .select("node", "lbl")
-            .localCheckpoint(eager=True)
         )
+
+    labels = _iterate(
+        und.select("u").distinct().select(F.col("u").alias("node"), F.col("u").alias("lbl")),
+        _adopt, name="label_propagation", rounds=iterations,
+    )
     sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).cast("long").alias("community_size"))
     return labels.join(sizes, "lbl").select(
         "node", F.col("lbl").alias("community"), "community_size"
@@ -656,66 +687,37 @@ def kcore_hindex(
     The per-round h-index is max(least(val, rn)) over neighbors ranked by
     descending value — row_number ties among equal values are provably
     irrelevant to that max, so the window needs no tiebreak column.
+    Self-loops are dropped and an edge listed in both directions counts
+    once, as in the twin.
     """
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(tgt).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    und = e.unionAll(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    und = _undirected(
+        edges.filter(F.col(src) != F.col(tgt)), src, tgt
     ).localCheckpoint(eager=True)
     deg = (
-        und.groupBy("a")
+        und.groupBy("u")
         .agg(F.count(F.lit(1)).cast("long").alias("val"))
-        .select(F.col("a").alias("node"), "val")
+        .select(F.col("u").alias("node"), "val")
         .localCheckpoint(eager=True)
     )
 
     def _round(cur: DataFrame) -> DataFrame:
         nb = und.join(
-            cur.select(F.col("node").alias("b"), "val"), "b"
-        ).select("a", "val")
-        w = Window.partitionBy("a").orderBy(F.col("val").desc())
+            cur.select(F.col("node").alias("v"), "val"), "v"
+        ).select("u", "val")
+        w = Window.partitionBy("u").orderBy(F.col("val").desc())
         return (
             nb.withColumn("rn", F.row_number().over(w))
-            .groupBy("a")
+            .groupBy("u")
             .agg(F.max(F.least(F.col("val"), F.col("rn"))).cast("long").alias("val"))
-            .select(F.col("a").alias("node"), "val")
+            .select(F.col("u").alias("node"), "val")
         )
 
-    vals = deg
-    if iterations is not None:
-        if iterations < 0:
-            raise ValueError(f"iterations must be >= 0, got {iterations}")
-        for k in range(iterations):
-            vals = _round(vals).localCheckpoint(eager=True)
-            if on_round is not None:
-                on_round(k, None)
-    else:
-        if max_iter < 1:
-            raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-        changed = -1
-        for k in range(max_iter):
-            # old value rides into the round's checkpoint so the
-            # convergence count is a filter over it, not a second join job
-            # (the connected_components round shape)
-            nxt = (
-                _round(vals)
-                .join(vals.select("node", F.col("val").alias("_old")), "node")
-                .localCheckpoint(eager=True)
-            )
-            changed = nxt.filter(F.col("val") != F.col("_old")).count()
-            vals = nxt.select("node", "val")
-            if on_round is not None:
-                on_round(k, changed)
-            if changed == 0:
-                break
-        else:
-            raise RuntimeError(
-                f"kcore_hindex did not converge in {max_iter} rounds "
-                f"({changed} values still changing) — raise max_iter"
-            )
+    if iterations is not None and iterations < 0:
+        raise ValueError(f"iterations must be >= 0, got {iterations}")
+    vals = _iterate(
+        deg, _round, name="kcore_hindex", rounds=iterations, max_iter=max_iter,
+        key="node", value="val", on_round=on_round,
+    )
     return deg.withColumnRenamed("val", "degree").join(
         vals.withColumnRenamed("val", "coreness"), "node"
     )
@@ -820,33 +822,29 @@ def neighborhood_sizes(
     neighbors).  Joins are equi-joins on entity keys; the distinct +
     count aggregates are map-side combinable.
     """
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(tgt).alias("b"))
-        .union(edges.select(F.col(tgt).alias("a"), F.col(src).alias("b")))
-        .distinct()
-    )
+    und = _undirected(edges, src, tgt)
     if max_degree is not None:
-        deg = und.groupBy("a").agg(F.count("*").alias("_d"))
-        mid_ok = deg.filter(F.col("_d") <= max_degree).select("a")
-        mid = und.join(mid_ok, "a", "left_semi")
+        deg = und.groupBy("u").agg(F.count("*").alias("_d"))
+        mid_ok = deg.filter(F.col("_d") <= max_degree).select("u")
+        mid = und.join(mid_ok, "u", "left_semi")
     else:
         mid = und
     two = (
         und.alias("x")
-        .join(mid.alias("y"), F.col("x.b") == F.col("y.a"))
-        .select(F.col("x.a").alias("a"), F.col("y.b").alias("b"))
-        .filter(F.col("a") != F.col("b"))
+        .join(mid.alias("y"), F.col("x.v") == F.col("y.u"))
+        .select(F.col("x.u").alias("u"), F.col("y.v").alias("v"))
+        .filter(F.col("u") != F.col("v"))
     )
     ball2 = (
         und.unionByName(two)
         .distinct()
-        .groupBy("a")
+        .groupBy("u")
         .agg(F.count("*").cast("long").alias("ball2"))
     )
-    ball1 = und.groupBy("a").agg(F.count("*").cast("long").alias("ball1"))
+    ball1 = und.groupBy("u").agg(F.count("*").cast("long").alias("ball1"))
     return (
-        ball1.join(ball2, "a")
-        .select(F.col("a").alias("entity"), "ball1", "ball2")
+        ball1.join(ball2, "u")
+        .select(F.col("u").alias("entity"), "ball1", "ball2")
     )
 
 
@@ -945,17 +943,12 @@ def personalized_pagerank(
                     + (num * SUM_{u~v} (r(u) // deg(u))) // den
 
     Shape: identical per-round join+sum as pagerank_fixedpoint (one
-    equi-join + map-side-combinable aggregate, localCheckpoint per round
-    to truncate lineage); the seed marker rides the degree table.
+    equi-join + map-side-combinable aggregate); the seed marker rides the
+    degree table.
     """
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    und = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected(edges, src, dst).localCheckpoint(eager=True)
     deg = und.groupBy("u").agg(F.count("*").cast("long").alias("d"))
     if seeds is None:
         seeds = deg.orderBy(F.desc("d"), F.asc("u")).limit(n_seeds).select("u")
@@ -969,10 +962,8 @@ def personalized_pagerank(
         raise ValueError("no seed is present in the edge list")
     r0 = scale // ns
     teleport = ((damping_den - damping_num) * r0) // damping_den
-    ranks = marked.select(
-        "u", F.when(F.col("_s") == 1, r0).otherwise(0).cast("long").alias("r")
-    )
-    for _ in range(iterations):
+
+    def _step(ranks: DataFrame) -> DataFrame:
         contrib = (
             ranks.join(marked, "u")
             .join(und, "u")
@@ -980,7 +971,7 @@ def personalized_pagerank(
             .groupBy("v")
             .agg(F.sum("c").alias("s"))
         )
-        ranks = (
+        return (
             marked.select("u", "_s")
             .join(contrib.withColumnRenamed("v", "u"), "u", "left")
             .select(
@@ -990,8 +981,14 @@ def personalized_pagerank(
                     + F.expr(f"({damping_num} * coalesce(s, 0)) DIV {damping_den}")
                 ).cast("long").alias("r"),
             )
-            .localCheckpoint(eager=True)
         )
+
+    ranks = _iterate(
+        marked.select(
+            "u", F.when(F.col("_s") == 1, r0).otherwise(0).cast("long").alias("r")
+        ),
+        _step, name="personalized_pagerank", rounds=iterations,
+    )
     return ranks.select(
         F.col("u").alias("entity"),
         F.col("r").alias("ppr_fp"),
@@ -1133,17 +1130,13 @@ def random_walks(
     Shape at corpus scale: the neighbor dictionary (adjacency + per-node
     rank + degree) is built once; each step is ONE equi-join of the
     frontier against it on (node, picked_rank) — K steps = K joins, no
-    per-row Python, frontier localCheckpointed per step (the iterative-
-    lineage lesson).  Walk count scales as nodes x walks_per_node, the
-    intended training-corpus volume.
+    per-row Python, frontier localCheckpointed per step (a walk keeps
+    every step, so it is not an :func:`_iterate` loop).  Walk count
+    scales as nodes x walks_per_node, the intended training-corpus volume.
     """
     if walk_length < 1 or walks_per_node < 1:
         raise ValueError("walk_length and walks_per_node must be >= 1")
-    und = (
-        edges.select(F.col(src).alias("u"), F.col(tgt).alias("v"))
-        .union(edges.select(F.col(tgt).alias("u"), F.col(src).alias("v")))
-        .distinct()
-    )
+    und = _undirected(edges, src, tgt)
     nbr = und.withColumn(
         "rank",
         F.row_number().over(Window.partitionBy("u").orderBy("v")) - 1,
@@ -1217,14 +1210,11 @@ def degree_alpha(edges: DataFrame, src: str = "src", tgt: str = "tgt") -> DataFr
     alpha's closed form is a fixed tree, 4dp.  Nodes with d == d_min
     contribute ln(1) = 0 exactly in both engines.
     """
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(tgt).alias("b"))
-        .union(edges.select(F.col(tgt).alias("a"), F.col(src).alias("b")))
-        .distinct()
+    deg = _undirected(edges, src, tgt).groupBy("u").agg(
+        F.count("*").cast("long").alias("d")
     )
-    deg = und.groupBy("a").agg(F.count("*").cast("long").alias("d"))
     lst = F.sort_array(
-        F.collect_list(F.struct(F.col("d"), F.col("a"), F.col("d").cast("double").alias("dd")))
+        F.collect_list(F.struct(F.col("d"), F.col("u"), F.col("d").cast("double").alias("dd")))
     )
     agg = deg.groupBy().agg(
         F.count("*").cast("long").alias("n_nodes"),
@@ -1492,7 +1482,11 @@ def hits_bipartite(
 
     Shape at scale: one distinct projection of the mention table, then per
     iteration two (join + map-side-combinable sum) passes and two scalar
-    totals; each half-step localCheckpointed (module-docstring lesson).
+    totals.  The loop state is the checkpointed raw authority sums; the
+    first round's are count x scale (every hub starts at scale and ``bi``
+    is distinct), so K iterations run K-1 rounds of (hub half, authority
+    half) and no hub half-step is computed only to be thrown away.  An
+    empty mention table yields 0 rows, as in pagerank_fixedpoint.
     """
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
@@ -1501,37 +1495,35 @@ def hits_bipartite(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    hubs = bi.select("c").distinct().select(
-        "c", F.lit(int(scale)).cast("long").alias("h")
+
+    def _norm(raw: DataFrame, key: str) -> DataFrame:
+        # read the scalar total off the checkpointed raw sums and inline it
+        # as a literal: a crossJoin(broadcast) of the total would recompute
+        # the whole join+aggregate to build the 1-row side.  The total is an
+        # exact integer, so the literal is bit-identical.  An empty table
+        # has no total and its empty frame needs no divisor.
+        t = raw.agg(F.sum("x").cast("long")).first()[0]
+        t = 1 if t is None else t
+        return raw.select(key, F.expr(f"(x * {int(scale)}) DIV {t}").alias("x"))
+
+    def _half(raw: DataFrame, frm: str, to: str) -> DataFrame:
+        return (
+            bi.join(_norm(raw, frm), frm)
+            .groupBy(to)
+            .agg(F.sum("x").cast("long").alias("x"))
+        )
+
+    a_raw = _iterate(
+        bi.groupBy("e")
+        .agg((F.count(F.lit(1)) * int(scale)).cast("long").alias("x"))
+        .localCheckpoint(eager=True),
+        lambda a: _half(_half(a, "e", "c").localCheckpoint(eager=True), "c", "e"),
+        name="hits_bipartite", rounds=iterations - 1,
     )
-    auth = None
-    for _ in range(iterations):
-        # checkpoint the RAW sums, read the scalar total off the
-        # checkpoint, and inline it as a literal: the crossJoin(broadcast)
-        # form recomputed the whole join+aggregate a second time just to
-        # build the 1-row broadcast side (2 full passes per half-step).
-        # The total is an exact integer, so the literal is bit-identical
-        # to the broadcast column.
-        a_raw = (
-            bi.join(hubs, "c")
-            .groupBy("e")
-            .agg(F.sum("h").cast("long").alias("ar"))
-            .localCheckpoint(eager=True)
-        )
-        a_t = int(a_raw.agg(F.sum("ar").cast("long")).first()[0])
-        auth = a_raw.select("e", F.expr(f"(ar * {int(scale)}) DIV {a_t}").alias("a"))
-        h_raw = (
-            bi.join(auth, "e")
-            .groupBy("c")
-            .agg(F.sum("a").cast("long").alias("hr"))
-            .localCheckpoint(eager=True)
-        )
-        h_t = int(h_raw.agg(F.sum("hr").cast("long")).first()[0])
-        hubs = h_raw.select("c", F.expr(f"(hr * {int(scale)}) DIV {h_t}").alias("h"))
-    return auth.select(
+    return _norm(a_raw, "e").select(
         F.col("e").alias(auth_col),
-        F.col("a").alias("auth_fp"),
-        (F.col("a") / F.lit(float(scale))).alias("authority"),
+        F.col("x").alias("auth_fp"),
+        (F.col("x") / F.lit(float(scale))).alias("authority"),
     )
 
 
@@ -1552,20 +1544,17 @@ def ktruss_edges(
 
     Peeling: each round counts per-edge triangle support, drops edges
     below k-2, repeats until no edge drops (monotone shrinking, so a
-    stable COUNT proves a stable SET — the convergence-observed pattern
-    of connected_components; raises if max_iter rounds don't converge).
-    Triangles are enumerated once each via a STATIC total order on nodes
-    by (initial degree, name) — the same last-reducer orientation as
-    triangle_counts, valid through every round because any consistent
-    total order yields exact enumeration; keeping the initial order
-    avoids re-ranking as degrees shrink (at most it loosens the
-    O(sqrt(m)) wedge bound on later, smaller rounds).
+    stable COUNT proves a stable SET; raises if max_iter rounds don't
+    converge).  Triangles come from the shared kernel with a STATIC
+    orientation by (initial degree, name), valid through every round
+    because any consistent total order yields exact enumeration; keeping
+    the initial order avoids re-ranking as degrees shrink (at most it
+    loosens the O(sqrt(m)) wedge bound on later, smaller rounds).
 
     The DuckDB twin (``queries[kg_ktruss]``) unrolls a fixed round count
     >= the observed convergence depth; extra rounds are no-ops on the
     fixed point, so the hash gate is exact.  Each round is two equi-joins
-    + one map-side-combinable count; every round localCheckpoints (the
-    iterative-lineage lesson in the module docstring).
+    + one map-side-combinable count.
     """
     if k < 3:
         raise ValueError(f"k-truss needs k >= 3, got {k}")
@@ -1581,58 +1570,28 @@ def ktruss_edges(
     )
     und = e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     deg = und.groupBy("a").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    g = e.join(
-        deg.select(F.col("a"), F.col("d").alias("da")), "a"
-    ).join(deg.select(F.col("a").alias("b"), F.col("d").alias("db")), "b")
-    fwd = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-    )
-    cur = g.select(
-        F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("lo"),
-        F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("hi"),
-        F.when(fwd, F.col("db")).otherwise(F.col("da")).alias("dhi"),
-    ).localCheckpoint(eager=True)
-    n = cur.count()
 
-    def _support(cc):
-        x, y = cc.alias("x"), cc.alias("y")
-        hi_order = (F.col("x.dhi") < F.col("y.dhi")) | (
-            (F.col("x.dhi") == F.col("y.dhi")) & (F.col("x.hi") < F.col("y.hi"))
-        )
-        wedges = x.join(y, (F.col("x.lo") == F.col("y.lo")) & hi_order).select(
-            F.col("x.lo").alias("n0"),
-            F.col("x.hi").alias("n1"),
-            F.col("y.hi").alias("n2"),
-        )
-        closing = cc.select(F.col("lo").alias("n1"), F.col("hi").alias("n2"))
-        tri = wedges.join(closing, ["n1", "n2"])
-        return (
+    def _peel(kept: DataFrame) -> DataFrame:
+        cur = kept.select("lo", "hi", "dhi")
+        tri = _triangles(cur)
+        sup = (
             tri.select(F.col("n0").alias("lo"), F.col("n1").alias("hi"))
             .unionAll(tri.select(F.col("n1").alias("lo"), F.col("n2").alias("hi")))
             .unionAll(tri.select(F.col("n0").alias("lo"), F.col("n2").alias("hi")))
             .groupBy("lo", "hi")
             .agg(F.count(F.lit(1)).cast("long").alias("s"))
         )
-
-    for _ in range(max_iter):
-        sup = _support(cur)
-        kept = (
+        return (
             cur.join(sup, ["lo", "hi"], "left")
             .withColumn("s", F.coalesce(F.col("s"), F.lit(0)).cast("long"))
             .filter(F.col("s") >= thr)
-            .localCheckpoint(eager=True)
         )
-        m = kept.count()
-        if m == n:
-            return kept.select(
-                F.least("lo", "hi").alias(src),
-                F.greatest("lo", "hi").alias(tgt),
-                F.col("s").alias("support"),
-            )
-        cur = kept.select("lo", "hi", "dhi")
-        n = m
-    raise RuntimeError(
-        f"k-truss peeling did not converge within max_iter={max_iter}"
+
+    kept = _iterate(_orient(e, deg), _peel, name="ktruss_edges", max_iter=max_iter)
+    return kept.select(
+        F.least("lo", "hi").alias(src),
+        F.greatest("lo", "hi").alias(tgt),
+        F.col("s").alias("support"),
     )
 
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from lightrag_spark.operators import graphs
 from lightrag_spark.operators.graphs import connected_components, duplicate_components
 
 
@@ -63,6 +64,37 @@ def test_nonconvergence_raises(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(df, max_iter=2)
+
+
+def test_driver_bound_counts_both_orientations(spark, monkeypatch):
+    """driver_max_edges is compared with the deduplicated edge list in
+    both orientations (2 rows per undirected pair): at exactly that row
+    count the driver union-find runs, one below it the distributed loop
+    runs, and both give the same labels."""
+    calls = []
+    real = graphs._driver_union_find
+
+    def spy(*a):
+        calls.append(1)
+        return real(*a)
+
+    monkeypatch.setattr(graphs, "_driver_union_find", spy)
+    df = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 2), (10, 11)], "src long, dst long"
+    )
+    rows = 6  # 3 distinct undirected pairs x 2 orientations
+
+    def labels(bound):
+        return {
+            r.node: r.component
+            for r in connected_components(df, driver_max_edges=bound).collect()
+        }
+
+    at = labels(rows)
+    assert calls == [1]
+    below = labels(rows - 1)
+    assert calls == [1]
+    assert at == below == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
 def test_duplicate_components_contract(spark):

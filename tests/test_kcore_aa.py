@@ -66,6 +66,14 @@ def test_kcore_iterations_zero_returns_degree(spark):
     assert all(d == c for d, c in got.values())
 
 
+def test_kcore_edge_listed_both_ways_counts_once(spark):
+    """The neighbor list is a set, as in the twin's UNION: a triangle
+    listed in both directions has degree and coreness 2, not 4."""
+    tri = [(1, 2), (2, 3), (1, 3)]
+    both = tri + [(b, a) for a, b in tri]
+    assert _kcore(spark, both) == {1: (2, 2), 2: (2, 2), 3: (2, 2)}
+
+
 def _aa(spark, edges, **kw):
     df = spark.createDataFrame(edges, "src long, dst long")
     return {

@@ -51,3 +51,18 @@ def test_single_edge_pair(spark):
     # pair oscillates but stays a deterministic 2-node structure
     assert set(got) == {"x", "y"}
     assert got["x"]["community_size"] + got["y"]["community_size"] in (2, 4)
+
+
+def test_self_loops_dropped_like_twin(spark):
+    """A self-loop must not vote for its own label: the twin
+    (queries[kg_communities]) drops self-loops from both orientations of
+    its neighbor list, so must the operator."""
+    edges = spark.createDataFrame(
+        [("a", "a"), ("a", "b"), ("a", "c"), ("b", "d"), ("c", "d")],
+        "src string, tgt string",
+    )
+    got = _rows(label_propagation(edges, iterations=4))
+    assert {n: r["community"] for n, r in got.items()} == {
+        "a": "a", "b": "b", "c": "b", "d": "a"
+    }
+    assert all(r["community_size"] == 2 for r in got.values())

@@ -169,6 +169,14 @@ def test_hits_bipartite_matches_float_reference(spark):
         assert out[e]["authority"] == pytest.approx(v, abs=1e-4)
 
 
+def test_hits_bipartite_empty_mentions(spark):
+    # same contract as pagerank_fixedpoint on an empty graph: 0 rows
+    m = spark.createDataFrame([], "chunk_id string, entity_name string")
+    out = hits_bipartite(m, iterations=4)
+    assert out.columns == ["entity_name", "auth_fp", "authority"]
+    assert out.count() == 0
+
+
 def test_label_centroids_cohesion(spark):
     # label 0: four identical vectors -> cohesion exactly 1.0, norm = |v|
     # label 1: two opposite vectors -> centroid ~0, cohesion ~0
@@ -232,6 +240,19 @@ def test_ktruss_cascading_rounds(spark):
     assert ktruss_edges(e, k=4).count() == 0
     # k=3 keeps both triangles intact
     assert ktruss_edges(e, k=3).count() == 5
+
+
+def test_ktruss_nonconvergence_raises(spark):
+    from lightrag_spark.operators.graphs import ktruss_edges
+
+    # the cascading graph above peels in two rounds and confirms in a
+    # third: max_iter=1 must fail loud, not return a half-peeled truss
+    e = spark.createDataFrame(
+        [("a", "b"), ("a", "c"), ("b", "c"), ("a", "d"), ("b", "d")],
+        "src string, tgt string",
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        ktruss_edges(e, k=4, max_iter=1)
 
 
 def test_ktruss_validates_k(spark):

@@ -21,6 +21,22 @@ def _write_batch(d, name, rows):
     os.rename(path + ".tmp", path)
 
 
+def _await_drained(q, timeout=120):
+    """availableNow does not end on its own here: the processing-time
+    timeout makes Spark keep running no-data batches until every open
+    session times out (30 min).  A no-data batch that completes after a
+    data batch proves all input is committed, so stop the query there.  (A
+    restart may first replay the no-data batch the previous stop cut
+    short, so a 0-row batch before any data proves nothing.)"""
+    deadline = time.monotonic() + timeout
+    while q.isActive and time.monotonic() < deadline:
+        rows = [p["numInputRows"] for p in q.recentProgress]
+        if any(n == 0 and any(rows[:i]) for i, n in enumerate(rows)):
+            break
+        time.sleep(0.2)
+    q.stop()
+
+
 def _run_available_now(spark, src_dir, ckpt, out_dir):
     """Parquet sink (fault-tolerant): re-running with the same checkpoint is
     a genuine recovery — state survives across restarts.  Rows accumulate in
@@ -35,7 +51,7 @@ def _run_available_now(spark, src_dir, ckpt, out_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_drained(q)
     return spark.read.parquet(out_dir)
 
 
