@@ -252,19 +252,19 @@ def insert_custom_chunks(
     table (absent doc -> create; present -> union-only patch); a fully
     committed operation re-run is a no-op (0 new chunks, 0 model calls).
 
-    Commit ordering follows upsert_pages_batch: cache rows append FIRST,
-    then the atomic graph pair swap, then the chunks append — the chunks
-    row set is the doc-visible commit record, written last, and a crash
-    anywhere earlier leaves a retryable state (extra cache rows are
-    harmless; chunk-id dedup makes the retry exact).
+    The new chunks run the build's ``extract_chunks`` under ``cfg`` and
+    then ``upsert_pages_batch``'s commit (``merge_kg`` into an empty
+    graph dir, ``upsert_graph`` otherwise; pinned, released at commit):
+    cache rows append FIRST, then the atomic graph pair swap, then the
+    chunks append — the chunks row set is the doc-visible commit record,
+    written last, and a crash anywhere earlier leaves a retryable state
+    (extra cache rows are harmless; chunk-id dedup makes the retry exact).
     """
+    import dataclasses
     import os
 
-    from ..operators.extraction import extract_records, split_records
-    from ..operators.merge import finish_graph, merge_entity_nodes, merge_relation_edges
-    from .incremental_merge import upsert_graph
-    from .kg_build import KGBuildConfig, release
-    from ..streaming.kg_ingest import _commit_pair, _committed
+    from ..streaming.kg_ingest import _commit_batch
+    from .kg_build import KGBuildConfig, extract_chunks
 
     cfg = cfg or KGBuildConfig()
     full_text = sanitize_text_for_encoding(full_text)
@@ -301,9 +301,6 @@ def insert_custom_chunks(
     )
 
     chunks_path = os.path.join(graph_dir, "chunks")
-    nodes_path = os.path.join(graph_dir, "kg_nodes")
-    edges_path = os.path.join(graph_dir, "kg_edges")
-    cache_path = os.path.join(graph_dir, "llm_cache")
 
     mode = "create"
     new_batch = batch
@@ -322,40 +319,9 @@ def insert_custom_chunks(
         return {"doc_id": doc_key, "mode": "noop", "inserted_chunks": 0,
                 "operation_id": operation_id}
 
-    from pyspark.storagelevel import StorageLevel
-
-    records = extract_records(
-        new_batch,
-        max_gleaning=cfg.max_gleaning,
-        run_ts=cfg.run_ts,
-        model_min_len=cfg.model_min_len,
-        tokenizer_kind=cfg.tokenizer_kind,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        mentions, triples, cache = split_records(records)
-        if _committed(nodes_path) and _committed(edges_path):
-            stored_n = spark.read.parquet(nodes_path)
-            stored_e = spark.read.parquet(edges_path)
-            nodes, edges = upsert_graph(stored_n, stored_e, mentions, triples, cfg)
-        else:
-            nodes, edges = finish_graph(
-                merge_entity_nodes(
-                    mentions, salts=cfg.merge_salts,
-                    max_fragments=cfg.max_description_fragments,
-                ),
-                merge_relation_edges(
-                    triples, salts=cfg.merge_salts,
-                    max_fragments=cfg.max_description_fragments,
-                ),
-            )
-
-        os.makedirs(graph_dir, exist_ok=True)
-        cache.write.mode("append").parquet(cache_path)
-        _commit_pair(nodes, edges, graph_dir)
-        new_batch.write.mode("append").parquet(chunks_path)
-        release(nodes, edges)
-    finally:
-        records.unpersist()
+    cfg = dataclasses.replace(cfg, cache_records=True)
+    _commit_batch(spark, extract_chunks(new_batch, cfg), graph_dir, cfg)
+    new_batch.write.mode("append").parquet(chunks_path)
     return {
         "doc_id": doc_key,
         "mode": mode,

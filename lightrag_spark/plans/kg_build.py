@@ -12,10 +12,21 @@ re-derivable — resume recomputes merges from the cache table rather than
 re-calling the model (the reference's delete/rebuild path,
 operate.py:1005-1318, works the same way).
 
-``build_kg`` is two halves: ``extract_kg`` (docs -> chunks -> records ->
-mentions / triples / llm_cache) then ``merge_kg`` (merges -> summaries ->
-UNKNOWN endpoints -> degrees).  An ingest batch runs the first half, then
-either the second or an upsert into the stored graph.
+``build_kg`` is two halves: ``extract_kg`` (docs -> chunks, then
+``extract_chunks``: cache rejoin -> records -> mentions / triples /
+llm_cache) and ``merge_kg`` (merges -> summaries -> UNKNOWN endpoints ->
+degrees).  Every path from chunks to a graph runs these two:
+
+- ``extract_chunks``: ``extract_kg`` (so ``build_kg`` and the ingest
+  batch), ``plans/runner.run_indexing`` over its stored chunks table,
+  ``plans/mutations.rebuild_kg_from_chunks`` over the surviving chunks,
+  ``plans/custom_kg.insert_custom_chunks`` over caller-chunked text, and
+  ``streaming/incremental.stream_chunk_extract`` for its records.
+- ``merge_kg``: ``build_kg``, the runner, the delete-path rebuild, and the
+  first batch into an empty graph dir.
+- the batch commit (``streaming/kg_ingest._commit_batch``: ``merge_kg`` or
+  ``upsert_graph``, cache append, atomic node/edge swap, release):
+  ``upsert_pages_batch`` and ``insert_custom_chunks``.
 """
 
 from __future__ import annotations
@@ -33,7 +44,7 @@ from ..constants import (
     MAX_DESCRIPTION_FRAGMENTS,
 )
 from ..operators.chunking import chunk_documents
-from ..operators.extraction import extract_records, split_records
+from ..operators.extraction import args_hash_col, extract_records, split_records
 from ..operators.merge import finish_graph, merge_entity_nodes, merge_relation_edges
 from ..operators.summary import finalize_descriptions
 
@@ -165,13 +176,8 @@ def extract_kg(
     llm_cache: DataFrame | None = None,
     model_call_counter=None,
 ) -> KGExtraction:
-    """docs(doc_id, text, file_path, doc_order) -> chunks, extraction
-    records and their mention / triple / cache splits.
-
-    ``llm_cache`` (args_hash, chunk_id, pass_index, content, create_time) is
-    the prior run's extraction cache: cached responses are re-parsed instead
-    of re-calling the model (the resume primitive, SURVEY.md §3.3).
-    """
+    """docs(doc_id, text, file_path, doc_order) -> chunks, then
+    ``extract_chunks`` over them."""
     cfg = cfg or KGBuildConfig()
     par = cfg.parallelism or docs.sparkSession.sparkContext.defaultParallelism * 2
     # Spread documents across workers for the chunking UDF (narrow transform
@@ -196,23 +202,49 @@ def extract_kg(
         # the scan+repartition+Python subtree.  This is the local stand-in
         # for the runner's chunks-table write — the pipeline's natural
         # materialization boundary.  LAZY (eager=False): the records
-        # materialization below is the single first-touch and saves the
-        # chunk blocks as a side effect — an eager checkpoint here would
-        # pay one extra sequential pass over the corpus.
+        # materialization in extract_chunks is the single first-touch and
+        # saves the chunk blocks as a side effect — an eager checkpoint
+        # here would pay one extra sequential pass over the corpus.
         chunks = chunks.localCheckpoint(eager=False)
+    return extract_chunks(chunks, cfg, llm_cache, model_call_counter)
 
-    extract_input = chunks
-    if llm_cache is not None:
-        from pyspark.sql import functions as F
 
-        pivoted = llm_cache.groupBy("chunk_id").agg(
-            F.max(F.when(F.col("pass_index") == 0, F.col("content"))).alias("cached_resp0"),
-            F.max(F.when(F.col("pass_index") == 1, F.col("content"))).alias("cached_resp1"),
+def _rejoin_cache(chunks: DataFrame, llm_cache: DataFrame) -> DataFrame:
+    """Attach each chunk's cached pass-0/pass-1 responses.  The join is
+    CONTENT-keyed (args_hash = md5 of chunk_id + chunk text + pass), not
+    chunk_id-keyed: changed chunking options give different text under the
+    same positional chunk_id, and a chunk_id join would reuse the stale
+    responses.  With the content key they miss and the model is called
+    again — the reference's stale-extraction purge on changed chunk
+    options (pipeline.py:5417+)."""
+    from pyspark.sql import functions as F
+
+    by_hash = llm_cache.select("args_hash", "content").dropDuplicates(["args_hash"])
+    for p in (0, 1):
+        key = args_hash_col(F.col("chunk_id"), F.col("content"), f"extract-{p}")
+        hit = by_hash.select(
+            F.col("args_hash").alias("_h"), F.col("content").alias(f"cached_resp{p}")
         )
-        extract_input = chunks.join(pivoted, "chunk_id", "left")
+        chunks = chunks.withColumn("_h", key).join(hit, "_h", "left").drop("_h")
+    return chunks
 
+
+def extract_chunks(
+    chunks: DataFrame,
+    cfg: KGBuildConfig | None = None,
+    llm_cache: DataFrame | None = None,
+    model_call_counter=None,
+) -> KGExtraction:
+    """chunks(chunk_id, content, file_path, doc_order, chunk_order_index)
+    -> extraction records and their mention / triple / cache splits.
+
+    ``llm_cache`` (args_hash, chunk_id, pass_index, content, create_time) is
+    a prior extraction cache: cached responses are re-parsed instead of
+    re-calling the model (the resume primitive, SURVEY.md §3.3).
+    """
+    cfg = cfg or KGBuildConfig()
     records = extract_records(
-        extract_input,
+        chunks if llm_cache is None else _rejoin_cache(chunks, llm_cache),
         max_gleaning=cfg.max_gleaning,
         run_ts=cfg.run_ts,
         model_min_len=cfg.model_min_len,

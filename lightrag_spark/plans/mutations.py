@@ -19,9 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extraction import extract_records, split_records
 from ..operators.merge import with_degrees
-from .kg_build import KGBuildConfig, checkpoint_concurrently, merge_kg, release
+from .kg_build import KGBuildConfig, extract_chunks, merge_kg, release
 
 
 def rebuild_kg_from_chunks(
@@ -33,48 +32,18 @@ def rebuild_kg_from_chunks(
     """(surviving chunks, cache) -> (kg_nodes, kg_edges), zero model calls.
 
     The chunk rows must carry (chunk_id, content, file_path, doc_order,
-    chunk_order_index) — the cache join re-parses stored responses.  The
-    merge half is the build's ``merge_kg``; under ``cfg.cache_records`` the
-    returned finals are pinned (release them with ``kg_build.release``)
-    and nothing else stays pinned.
+    chunk_order_index) — the build's ``extract_chunks`` re-parses their
+    stored responses, and its ``merge_kg`` merges them; under
+    ``cfg.cache_records`` the returned finals are pinned (release them
+    with ``kg_build.release``) and nothing else stays pinned.
     """
     cfg = cfg or KGBuildConfig()
-    pivoted = llm_cache.groupBy("chunk_id").agg(
-        F.max(F.when(F.col("pass_index") == 0, F.col("content"))).alias("cached_resp0"),
-        F.max(F.when(F.col("pass_index") == 1, F.col("content"))).alias("cached_resp1"),
-    )
-    joined = chunks.join(pivoted, "chunk_id", "left")
-    records = extract_records(
-        joined,
-        max_gleaning=cfg.max_gleaning,
-        run_ts=cfg.run_ts,
-        model_min_len=cfg.model_min_len,
-        model_corruption=cfg.model_corruption,
-        emit_cache_rows=False,
-        model_call_counter=model_call_counter,
-        max_extract_input_tokens=cfg.max_extract_input_tokens,
-        tokenizer_kind=cfg.tokenizer_kind,
-    )
-    if cfg.cache_records:
-        # Same contract as build_kg: the salted merges fan out into several
-        # concurrent AQE jobs, and concurrent first-touch of an
-        # unmaterialized extraction subtree recomputes it per job (measured
-        # ~3x on the delete-path rebuild).  Persist + pin before the fan-out.
-        from pyspark.storagelevel import StorageLevel
-
-        records = records.persist(StorageLevel.MEMORY_AND_DISK)
-        records.count()
-    mentions, triples, _ = split_records(records)
-    if cfg.cache_records:
-        # disjoint reads of the materialized records cache — safe to
-        # first-touch concurrently; checkpoint (not persist) truncates
-        # the rebuild DAG out of the merge consumers' plans
-        mentions, triples = checkpoint_concurrently([mentions, triples])
-    nodes, edges = merge_kg(mentions, triples, cfg)
+    ex = extract_chunks(chunks, cfg, llm_cache, model_call_counter)
+    nodes, edges = merge_kg(ex.mentions, ex.triples, cfg)
     if cfg.cache_records:
         # merge_kg checkpointed the finals: nothing reads these pins now
-        release(mentions, triples)
-        records.unpersist()
+        release(ex.mentions, ex.triples)
+        ex.records.unpersist()
     return nodes, edges
 
 

@@ -10,38 +10,35 @@ as parquet-to-parquet stage jobs (Iceberg snapshot commits in production):
   Stage 4  metrics            -> <out>/metrics.json
   Stage 5  doc_status PROCESSED -> <out>/doc_status/   (commit record, last)
 
-Each downstream stage reads the previous stage's table from disk — no
-recomputation, no cross-stage in-memory caches, and parquet column pruning
-keeps the merge from ever touching the raw-response column.  Resume: a
-re-run with the same out_dir joins <out>/llm_cache onto the new chunk set
-and re-parses instead of re-calling the model; docs already PROCESSED with
-an unchanged content hash are reported skipped.  Every chunk carries
-(part_id, lineage_id) and metrics record per-partition extents (north
-rule: per-partition lineage + metrics).
+Stages 2-3 are the build's own halves, ``kg_build.extract_chunks`` over
+the stored chunks table and then ``kg_build.merge_kg``, always pinned: the
+extraction records are persisted once and the narrow mention / triple
+splits checkpointed, so the records and llm_cache writes, the failure
+rollup and the merge each read a pin (the merge never touches the
+raw-response column).  The merge pins its finals, which the two graph
+writes read; every pin is released once the graph tables are written.
+Resume: a re-run with the same out_dir joins <out>/llm_cache onto the new
+chunk set by content and re-parses instead of re-calling the model; docs
+already PROCESSED with an unchanged content hash are reported skipped.
+Every chunk carries (part_id, lineage_id) and metrics record per-partition
+extents (north rule: per-partition lineage + metrics).
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import shutil
 import time
-from dataclasses import asdict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..constants import DOC_STATUS_FAILED, DOC_STATUS_PROCESSED
 from ..operators.chunking import chunk_documents
-from ..operators.extraction import (
-    args_hash_col,
-    extract_records,
-    split_errors,
-    split_records,
-)
-from ..operators.merge import finish_graph, merge_entity_nodes, merge_relation_edges
-from ..operators.summary import finalize_descriptions
-from .kg_build import KGBuildConfig
+from ..operators.extraction import split_errors
+from .kg_build import KGBuildConfig, extract_chunks, merge_kg, release
 
 
 def _exists(path: str) -> bool:
@@ -70,7 +67,7 @@ def run_indexing(
     """
     cfg = cfg or KGBuildConfig()
     t_start = time.time()
-    metrics: dict = {"stages": {}, "config": asdict(cfg)}
+    metrics: dict = {"stages": {}, "config": dataclasses.asdict(cfg)}
 
     chunks_path = os.path.join(out_dir, "chunks")
     records_path = os.path.join(out_dir, "records")
@@ -165,56 +162,21 @@ def run_indexing(
     )
 
     # ---- Stage 2: extraction (cache-aware) + records/cache tables ------------
-    # The resume join is CONTENT-keyed (args_hash = md5 of chunk_id + chunk
-    # text + pass), NOT chunk_id-keyed: re-running with changed chunking
-    # options produces different chunk text under the same positional
-    # chunk_id, and a chunk_id join would silently reuse stale responses.
-    # With the content key, stale entries simply miss and the model is
-    # re-called — the distributed form of the reference's stale-extraction
-    # purge on changed chunk options (pipeline.py:5417+).
+    # The build's extraction half over the stored chunks, always pinned:
+    # the records table, the llm_cache table, the failure rollup and the
+    # merge all read its records / mention / triple pins.  Its cache rejoin
+    # is CONTENT-keyed, so responses cached under other chunking options
+    # miss and the model is called again.  The prior llm_cache is only read
+    # while the records pin materializes, and _swap_in writes the new table
+    # to a tmp dir first, so the prior one stays readable until then.
     t0 = time.time()
-    extract_input = chunks
-    if prior_cache is not None:
-        by_hash = prior_cache.select("args_hash", "content").dropDuplicates(["args_hash"])
-        h0 = args_hash_col(F.col("chunk_id"), F.col("content"), "extract-0")
-        h1 = args_hash_col(F.col("chunk_id"), F.col("content"), "extract-1")
-        extract_input = (
-            chunks.withColumn("_h0", h0)
-            .withColumn("_h1", h1)
-            .join(
-                by_hash.select(
-                    F.col("args_hash").alias("_h0"), F.col("content").alias("cached_resp0")
-                ),
-                "_h0",
-                "left",
-            )
-            .join(
-                by_hash.select(
-                    F.col("args_hash").alias("_h1"), F.col("content").alias("cached_resp1")
-                ),
-                "_h1",
-                "left",
-            )
-            .drop("_h0", "_h1")
-        )
+    cfg = dataclasses.replace(cfg, cache_records=True)
     counter = spark.sparkContext.accumulator(0)
-    records = extract_records(
-        extract_input,
-        max_gleaning=cfg.max_gleaning,
-        run_ts=cfg.run_ts,
-        model_min_len=cfg.model_min_len,
-        model_corruption=cfg.model_corruption,
-        model_call_counter=counter,
-        model_fail_marker=cfg.model_fail_marker,
-        max_extract_input_tokens=cfg.max_extract_input_tokens,
-        tokenizer_kind=cfg.tokenizer_kind,
-    )
-    _swap_in(records, records_path)
-    records = spark.read.parquet(records_path)
-    mentions, triples, cache = split_records(records)
-    _swap_in(cache, cache_path)
+    ex = extract_chunks(chunks, cfg, prior_cache, counter)
+    _swap_in(ex.records, records_path)
+    _swap_in(ex.llm_cache, cache_path)
     metrics["stages"]["extraction"] = {
-        "records": records.count(),
+        "records": ex.records.count(),
         "model_calls": counter.value,
         "sec": round(time.time() - t0, 3),
     }
@@ -222,7 +184,7 @@ def run_indexing(
     # ---- failure rollup: chunk-level error records -> per-doc FAILED ----------
     # chunk ids are positional "{doc_id}-chunk-{NNN}", so the owning doc is
     # derivable scan-side — no join, no shuffle.
-    errors = split_errors(records).withColumn(
+    errors = split_errors(ex.records).withColumn(
         "doc_id", F.regexp_replace("chunk_id", "-chunk-[0-9]+$", "")
     )
     failed_docs = (
@@ -233,6 +195,7 @@ def run_indexing(
     )
     n_failed = failed_docs.count()
     metrics["docs_failed"] = n_failed
+    mentions, triples = ex.mentions, ex.triples
     if n_failed:
         # A FAILED doc contributes nothing to the graph: every record from
         # any of its chunks is excluded from the merge (reference: the whole
@@ -244,28 +207,13 @@ def run_indexing(
         )
         triples = triples.join(bad, doc_of(triples) == bad["doc_id"], "left_anti")
 
-    # ---- Stage 3: merge -> graph tables (reads the durable records table) ----
+    # ---- Stage 3: merge -> graph tables (the build's merge half) -------------
     t0 = time.time()
-    nodes = merge_entity_nodes(
-        mentions, salts=cfg.merge_salts, max_fragments=cfg.max_description_fragments
-    )
-    edges = merge_relation_edges(
-        triples, salts=cfg.merge_salts, max_fragments=cfg.max_description_fragments
-    )
-    if cfg.summarize:
-        nodes = finalize_descriptions(nodes, "entity_name", "Entity", cfg.tokenizer_kind)
-        edges = edges.withColumn(
-            "_pair", F.concat(F.lit("("), "src", F.lit(", "), "tgt", F.lit(")"))
-        )
-        edges = finalize_descriptions(edges, "_pair", "Relation", cfg.tokenizer_kind).drop("_pair")
-    _swap_in(edges, os.path.join(out_dir, "kg_edges"))
-    edges = spark.read.parquet(os.path.join(out_dir, "kg_edges"))
-    nodes, edges_final = finish_graph(nodes, edges)
+    nodes, edges = merge_kg(mentions, triples, cfg)
     _swap_in(nodes, os.path.join(out_dir, "kg_nodes"))
-    _swap_in(edges_final, os.path.join(out_dir, "kg_edges") + "_ranked")
-    # the ranked table supersedes the raw one
-    shutil.rmtree(os.path.join(out_dir, "kg_edges"))
-    os.rename(os.path.join(out_dir, "kg_edges") + "_ranked", os.path.join(out_dir, "kg_edges"))
+    _swap_in(edges, os.path.join(out_dir, "kg_edges"))
+    release(ex.mentions, ex.triples, nodes, edges)
+    ex.records.unpersist()
     metrics["stages"]["graph"] = {
         "nodes": spark.read.parquet(os.path.join(out_dir, "kg_nodes")).count(),
         "edges": spark.read.parquet(os.path.join(out_dir, "kg_edges")).count(),

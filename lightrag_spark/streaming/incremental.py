@@ -6,10 +6,11 @@ Spark translation is a Structured Streaming *ingest* stage feeding the
 batch merge:
 
 - ``stream_chunk_extract``: readStream over a pages directory -> sanitize ->
-  chunk -> extract (the same mapInPandas operators as batch — they are
-  streaming-safe because they are stateless per row) -> append-only records
-  sink.  This is the scale path for continuous crawls: extraction cost is
-  paid exactly once per chunk, checkpointed by the stream.
+  chunk -> the build's ``extract_chunks`` (the same mapInPandas operators
+  as batch — they are streaming-safe because they are stateless per row)
+  -> append-only records sink.  This is the scale path for continuous
+  crawls: extraction cost is paid exactly once per chunk, checkpointed by
+  the stream.
 - the merge stays a periodic batch job over the accumulated records table
   (entity merge is a global aggregation with caps and order keys —
   append-mode streaming cannot express it exactly, and the reference's own
@@ -21,11 +22,12 @@ preferred.
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.chunking import chunk_documents
-from ..operators.extraction import extract_records
-from ..plans.kg_build import KGBuildConfig
+from ..plans.kg_build import KGBuildConfig, extract_chunks
 from ..sources.pages import PAGES_SCHEMA, enqueue_documents
 
 
@@ -57,13 +59,8 @@ def stream_chunk_extract(
         with_lineage=False,  # monotonically_increasing_id is batch-only
         strategy=cfg.chunking_strategy,
     )
-    records = extract_records(
-        chunks,
-        max_gleaning=cfg.max_gleaning,
-        run_ts=cfg.run_ts,
-        model_min_len=cfg.model_min_len,
-        model_corruption=cfg.model_corruption,
-    )
+    # the build's extraction under this cfg; no pins on a streaming frame
+    records = extract_chunks(chunks, dataclasses.replace(cfg, cache_records=False)).records
     writer = (
         records.writeStream.format("parquet")
         .option("path", records_out)

@@ -22,8 +22,10 @@ Per-batch contract — each piece of work runs once:
   commits (the records right after the cache append), so a long-running
   stream holds no blocks from earlier batches.
 
-The commit itself is atomic (write-to-tmp + rename — the local-FS stand-in
-for an Iceberg snapshot commit, plans/runner.py:56).  The extraction cache
+Everything after the extraction is ``_commit_batch``, which
+``plans/custom_kg.insert_custom_chunks`` runs too.  The commit itself is
+atomic (write-to-tmp + rename — the local-FS stand-in for an Iceberg
+snapshot commit, as ``plans/runner._swap_in`` is).  The extraction cache
 rows append per batch, so delete/rebuild and resume work identically over
 a streamed graph and a batch-built one.
 
@@ -55,7 +57,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.incremental_merge import upsert_graph
-from ..plans.kg_build import KGBuildConfig, extract_kg, merge_kg, release
+from ..plans.kg_build import KGBuildConfig, KGExtraction, extract_kg, merge_kg, release
 from ..sources.pages import PAGES_SCHEMA, enqueue_documents
 
 NODES = "kg_nodes"
@@ -88,27 +90,13 @@ def _commit_pair(nodes: DataFrame, edges: DataFrame, graph_dir: str) -> None:
         os.rename(tmp, final)
 
 
-def upsert_pages_batch(
-    spark: SparkSession,
-    pages: DataFrame,
-    graph_dir: str,
-    cfg: KGBuildConfig | None = None,
+def _commit_batch(
+    spark: SparkSession, ex: KGExtraction, graph_dir: str, cfg: KGBuildConfig
 ) -> dict:
-    """One micro-batch body: pages -> docs -> extract -> merge or upsert ->
-    commit.
-
-    Also usable directly as the incremental-batch API (the reference's
-    ``ainsert`` on an existing graph) — foreachBatch below just calls it.
-    Returns per-batch lineage metrics (the streaming twin of the runner's
-    metrics side-table, plans/runner.py:140).
-
-    The body always pins (``cache_records`` on, whatever ``cfg`` says):
-    the extraction fans out into the cache append and both table writes,
-    and the merge or upsert into both writes, so without the pins each
-    consumer would re-run the model stage and the summary UDF.
-    """
-    cfg = dataclasses.replace(cfg or KGBuildConfig(), cache_records=True)
-    ex = extract_kg(enqueue_documents(pages), cfg)
+    """Merge or upsert a pinned extraction into ``graph_dir``, append its
+    cache rows, swap the node/edge pair in, and release every pin.
+    ``cfg.cache_records`` must be on (``ex`` came from a pinned
+    extraction).  Returns the batch's mention/triple counts."""
     pins = [ex.chunks, ex.mentions, ex.triples]
     nodes_path = os.path.join(graph_dir, NODES)
     edges_path = os.path.join(graph_dir, EDGES)
@@ -134,6 +122,29 @@ def upsert_pages_batch(
     finally:
         ex.records.unpersist()
         release(*pins)
+
+
+def upsert_pages_batch(
+    spark: SparkSession,
+    pages: DataFrame,
+    graph_dir: str,
+    cfg: KGBuildConfig | None = None,
+) -> dict:
+    """One micro-batch body: pages -> docs -> extract -> merge or upsert ->
+    commit.
+
+    Also usable directly as the incremental-batch API (the reference's
+    ``ainsert`` on an existing graph) — foreachBatch below just calls it.
+    Returns per-batch lineage metrics (the streaming twin of the runner's
+    per-partition metrics side-table, ``plans/runner.run_indexing``).
+
+    The body always pins (``cache_records`` on, whatever ``cfg`` says):
+    the extraction fans out into the cache append and both table writes,
+    and the merge or upsert into both writes, so without the pins each
+    consumer would re-run the model stage and the summary UDF.
+    """
+    cfg = dataclasses.replace(cfg or KGBuildConfig(), cache_records=True)
+    return _commit_batch(spark, extract_kg(enqueue_documents(pages), cfg), graph_dir, cfg)
 
 
 def stream_kg_ingest(

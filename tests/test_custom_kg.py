@@ -200,3 +200,50 @@ def test_insert_custom_chunks_first_batch_caps_fragments(spark, tmp_path):
 
     assert max_fragments(8) > 1
     assert max_fragments(1) == 1
+
+
+def test_insert_custom_chunks_first_batch_schema_matches_build(spark, tmp_path):
+    """The first batch into an empty graph dir runs the build's merge half,
+    so its stored node and edge tables carry build_kg's columns (the
+    summarized ``description`` and ``llm_was_used`` included)."""
+    from lightrag_spark.plans.custom_kg import insert_custom_chunks
+    from lightrag_spark.plans.kg_build import KGBuildConfig, build_kg
+
+    texts = ["alpha works with beta gamma", "delta joins epsilon"]
+    cfg = KGBuildConfig(merge_salts=2)
+    gd = str(tmp_path / "graph")
+    insert_custom_chunks(spark, gd, "schema doc", texts, cfg=cfg)
+    docs = spark.createDataFrame(
+        [("d0", " ".join(texts), "f", 0)],
+        "doc_id string, text string, file_path string, doc_order long",
+    )
+    built = build_kg(docs, cfg)
+
+    def cols(df):
+        return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+    assert cols(spark.read.parquet(gd + "/kg_nodes")) == cols(built.kg_nodes)
+    assert cols(spark.read.parquet(gd + "/kg_edges")) == cols(built.kg_edges)
+
+
+def test_insert_custom_chunks_honours_gleaning_budget(spark, tmp_path):
+    """Custom chunks are extracted under the build's config: a 1-token
+    gleaning budget skips every gleaning pass, so no pass-1 response is
+    cached (build_kg caches none either)."""
+    from pyspark.sql import functions as F
+
+    from lightrag_spark.plans.custom_kg import insert_custom_chunks
+    from lightrag_spark.plans.kg_build import KGBuildConfig
+
+    cfg = KGBuildConfig(merge_salts=2, max_gleaning=1, max_extract_input_tokens=1)
+    gd = str(tmp_path / "graph")
+    insert_custom_chunks(
+        spark, gd, "budget doc", ["alpha works with beta gamma", "delta joins epsilon"],
+        cfg=cfg,
+    )
+    passes = {
+        r["pass_index"]: r["n"]
+        for r in spark.read.parquet(gd + "/llm_cache")
+        .groupBy("pass_index").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    assert passes == {0: 2}

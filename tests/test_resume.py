@@ -83,3 +83,29 @@ def test_lineage_columns_present(spark):
     assert "part_id" in cols and "lineage_id" in cols
     rows = chunks.select("part_id", "lineage_id").collect()
     assert len({(r["part_id"], r["lineage_id"]) for r in rows}) == len(rows)
+
+
+def _rows(df):
+    cols = sorted(df.columns)
+    return sorted(repr([r[c] for c in cols]) for r in df.select(*cols).collect())
+
+
+def test_build_kg_cache_rejoin_is_content_keyed(spark, tmp_path):
+    """build_kg(llm_cache=...) after a chunking change: positional chunk
+    ids now name other text, so the cached responses must miss (the model
+    is called again) and the graph must equal a fresh build's."""
+    from lightrag_spark.plans.kg_build import build_kg
+    from lightrag_spark.sources.pages import enqueue_documents, synthesize_pages
+
+    docs = enqueue_documents(synthesize_pages(spark, 6, seed=3))
+    old = build_kg(docs, KGBuildConfig(**{**CFG, "chunk_token_size": 64}))
+    cache_path = str(tmp_path / "llm_cache")
+    old.llm_cache.write.parquet(cache_path)
+
+    cfg = KGBuildConfig(**CFG)
+    counter = spark.sparkContext.accumulator(0)
+    warm = build_kg(docs, cfg, spark.read.parquet(cache_path), counter)
+    fresh = build_kg(docs, cfg)
+    assert _rows(warm.kg_nodes) == _rows(fresh.kg_nodes)
+    assert _rows(warm.kg_edges) == _rows(fresh.kg_edges)
+    assert counter.value > 0

@@ -16,17 +16,22 @@ def test_stream_chunk_extract(spark, tmp_path):
     pages_dir = str(tmp_path / "pages")
     synthesize_pages(spark, 20, seed=3, min_words=30, max_words=200).write.parquet(pages_dir)
 
+    # The stream extracts under the build's config: with a 1-token
+    # gleaning budget no gleaning pass runs, so no pass-1 response is
+    # cached (build_kg caches none either).
+    cfg = KGBuildConfig(
+        chunk_token_size=48, chunk_overlap_token_size=8, max_gleaning=1,
+        max_extract_input_tokens=1,
+    )
     q = stream_chunk_extract(
-        spark,
-        pages_dir,
-        str(tmp_path / "records"),
-        str(tmp_path / "ckpt"),
-        KGBuildConfig(chunk_token_size=48, chunk_overlap_token_size=8, max_gleaning=0),
+        spark, pages_dir, str(tmp_path / "records"), str(tmp_path / "ckpt"), cfg
     )
     q.awaitTermination(300)
     recs = spark.read.parquet(str(tmp_path / "records"))
     assert recs.filter("kind = 'entity'").count() > 0
     assert recs.filter("kind = 'relation'").count() > 0
+    assert recs.filter("kind = 'cache' AND rec_order = 1").count() == 0
+    assert recs.filter("kind = 'cache'").count() > 0
 
     # incremental: add more pages, rerun availableNow — only the new backlog
     # is processed (checkpoint carries the offset state)
@@ -42,11 +47,7 @@ def test_stream_chunk_extract(spark, tmp_path):
         shutil.copy(f, os.path.join(pages_dir, f"more-{i}.parquet"))
     n_before = recs.count()
     q2 = stream_chunk_extract(
-        spark,
-        pages_dir,
-        str(tmp_path / "records"),
-        str(tmp_path / "ckpt"),
-        KGBuildConfig(chunk_token_size=48, chunk_overlap_token_size=8, max_gleaning=0),
+        spark, pages_dir, str(tmp_path / "records"), str(tmp_path / "ckpt"), cfg
     )
     q2.awaitTermination(300)
     n_after = spark.read.parquet(str(tmp_path / "records")).count()
