@@ -89,7 +89,6 @@ def extract_records(
     run_ts: int = 0,
     model_min_len: int = 5,
     model_corruption: bool = False,
-    emit_cache_rows: bool = True,
     model_call_counter=None,
     model_fail_marker: str | None = None,
     max_extract_input_tokens: int = DEFAULT_MAX_EXTRACT_INPUT_TOKENS,
@@ -131,7 +130,6 @@ def extract_records(
     gleaning = max_gleaning
     min_len = model_min_len
     corruption = model_corruption
-    emit_cache = emit_cache_rows
     counter = model_call_counter
     fail_marker = model_fail_marker
     max_glean_tokens = max_extract_input_tokens
@@ -272,11 +270,10 @@ def extract_records(
                             r["description"], r["keywords"], chunk_id, file_path,
                             chunk_order_index, rec_order, None)
                         rec_order += 1
-                if emit_cache:
-                    for pass_index, resp in enumerate(responses):
-                        add("cache", None, None, None, None, None, resp, None,
-                            chunk_id, file_path, chunk_order_index, pass_index,
-                            extraction_cache_key(chunk_id, content, pass_index))
+                for pass_index, resp in enumerate(responses):
+                    add("cache", None, None, None, None, None, resp, None,
+                        chunk_id, file_path, chunk_order_index, pass_index,
+                        extraction_cache_key(chunk_id, content, pass_index))
                 emitted += 1
                 if emitted >= EMIT_EVERY:
                     yield to_frame(buf)

@@ -252,19 +252,18 @@ def insert_custom_chunks(
     table (absent doc -> create; present -> union-only patch); a fully
     committed operation re-run is a no-op (0 new chunks, 0 model calls).
 
-    The new chunks run the build's ``extract_chunks`` under ``cfg`` and
-    then ``upsert_pages_batch``'s commit (``merge_kg`` into an empty
+    The new chunks run ``upsert_pages_batch``'s commit (the build's
+    ``extract_chunks`` under ``cfg``, then ``merge_kg`` into an empty
     graph dir, ``upsert_graph`` otherwise; pinned, released at commit):
     cache rows append FIRST, then the atomic graph pair swap, then the
     chunks append — the chunks row set is the doc-visible commit record,
     written last, and a crash anywhere earlier leaves a retryable state
     (extra cache rows are harmless; chunk-id dedup makes the retry exact).
     """
-    import dataclasses
     import os
 
     from ..streaming.kg_ingest import _commit_batch
-    from .kg_build import KGBuildConfig, extract_chunks
+    from .kg_build import KGBuildConfig
 
     cfg = cfg or KGBuildConfig()
     full_text = sanitize_text_for_encoding(full_text)
@@ -319,8 +318,7 @@ def insert_custom_chunks(
         return {"doc_id": doc_key, "mode": "noop", "inserted_chunks": 0,
                 "operation_id": operation_id}
 
-    cfg = dataclasses.replace(cfg, cache_records=True)
-    _commit_batch(spark, extract_chunks(new_batch, cfg), graph_dir, cfg)
+    _commit_batch(spark, new_batch, graph_dir, cfg)
     new_batch.write.mode("append").parquet(chunks_path)
     return {
         "doc_id": doc_key,

@@ -12,21 +12,23 @@ re-derivable — resume recomputes merges from the cache table rather than
 re-calling the model (the reference's delete/rebuild path,
 operate.py:1005-1318, works the same way).
 
-``build_kg`` is two halves: ``extract_kg`` (docs -> chunks, then
-``extract_chunks``: cache rejoin -> records -> mentions / triples /
-llm_cache) and ``merge_kg`` (merges -> summaries -> UNKNOWN endpoints ->
-degrees).  Every path from chunks to a graph runs these two:
+``build_kg`` is two halves: ``extract_kg`` (``build_chunks``: docs ->
+chunks, then ``extract_chunks``: cache rejoin -> records -> mentions /
+triples / llm_cache) and ``merge_kg`` (merges -> summaries -> UNKNOWN
+endpoints -> degrees).  Every path from chunks to a graph runs these two:
 
-- ``extract_chunks``: ``extract_kg`` (so ``build_kg`` and the ingest
-  batch), ``plans/runner.run_indexing`` over its stored chunks table,
-  ``plans/mutations.rebuild_kg_from_chunks`` over the surviving chunks,
-  ``plans/custom_kg.insert_custom_chunks`` over caller-chunked text, and
+- ``extract_chunks``: ``extract_kg`` (so ``build_kg``),
+  ``plans/runner.run_indexing`` over its stored chunks table (unpinned,
+  into its records table), ``plans/mutations.rebuild_kg_from_chunks``
+  over the surviving chunks, the batch commit below, and
   ``streaming/incremental.stream_chunk_extract`` for its records.
 - ``merge_kg``: ``build_kg``, the runner, the delete-path rebuild, and the
   first batch into an empty graph dir.
-- the batch commit (``streaming/kg_ingest._commit_batch``: ``merge_kg`` or
-  ``upsert_graph``, cache append, atomic node/edge swap, release):
-  ``upsert_pages_batch`` and ``insert_custom_chunks``.
+- the batch commit (``streaming/kg_ingest._commit_batch``: pinned
+  ``extract_chunks``, ``merge_kg`` or ``upsert_graph``, cache append,
+  atomic node/edge swap, release): ``upsert_pages_batch`` over
+  ``build_chunks`` of its pages and ``insert_custom_chunks`` over
+  caller-chunked text.
 """
 
 from __future__ import annotations
@@ -170,14 +172,9 @@ class KGBuildResult:
     config: KGBuildConfig = field(default_factory=KGBuildConfig)
 
 
-def extract_kg(
-    docs: DataFrame,
-    cfg: KGBuildConfig | None = None,
-    llm_cache: DataFrame | None = None,
-    model_call_counter=None,
-) -> KGExtraction:
-    """docs(doc_id, text, file_path, doc_order) -> chunks, then
-    ``extract_chunks`` over them."""
+def build_chunks(docs: DataFrame, cfg: KGBuildConfig | None = None) -> DataFrame:
+    """docs(doc_id, text, file_path, doc_order) -> the build's chunk table,
+    spread for the extractor (and lazily pinned under ``cfg.cache_records``)."""
     cfg = cfg or KGBuildConfig()
     par = cfg.parallelism or docs.sparkSession.sparkContext.defaultParallelism * 2
     # Spread documents across workers for the chunking UDF (narrow transform
@@ -206,7 +203,18 @@ def extract_kg(
         # saves the chunk blocks as a side effect — an eager checkpoint
         # here would pay one extra sequential pass over the corpus.
         chunks = chunks.localCheckpoint(eager=False)
-    return extract_chunks(chunks, cfg, llm_cache, model_call_counter)
+    return chunks
+
+
+def extract_kg(
+    docs: DataFrame,
+    cfg: KGBuildConfig | None = None,
+    llm_cache: DataFrame | None = None,
+    model_call_counter=None,
+) -> KGExtraction:
+    """docs(doc_id, text, file_path, doc_order) -> ``build_chunks``, then
+    ``extract_chunks`` over them."""
+    return extract_chunks(build_chunks(docs, cfg), cfg, llm_cache, model_call_counter)
 
 
 def _rejoin_cache(chunks: DataFrame, llm_cache: DataFrame) -> DataFrame:

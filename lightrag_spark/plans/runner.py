@@ -10,13 +10,12 @@ as parquet-to-parquet stage jobs (Iceberg snapshot commits in production):
   Stage 4  metrics            -> <out>/metrics.json
   Stage 5  doc_status PROCESSED -> <out>/doc_status/   (commit record, last)
 
-Stages 2-3 are the build's own halves, ``kg_build.extract_chunks`` over
-the stored chunks table and then ``kg_build.merge_kg``, always pinned: the
-extraction records are persisted once and the narrow mention / triple
-splits checkpointed, so the records and llm_cache writes, the failure
-rollup and the merge each read a pin (the merge never touches the
-raw-response column).  The merge pins its finals, which the two graph
-writes read; every pin is released once the graph tables are written.
+Stages 2-3 are the build's own halves.  ``kg_build.extract_chunks`` runs
+unpinned over the stored chunks table and streams into the records table;
+every later step reads that table from disk, so no in-memory cache
+crosses a stage boundary and a lost block recomputes from the table.
+``kg_build.merge_kg`` then runs pinned inside stage 3; the two graph
+writes read its pinned finals, which are released once both are written.
 Resume: a re-run with the same out_dir joins <out>/llm_cache onto the new
 chunk set by content and re-parses instead of re-calling the model; docs
 already PROCESSED with an unchanged content hash are reported skipped.
@@ -37,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ..constants import DOC_STATUS_FAILED, DOC_STATUS_PROCESSED
 from ..operators.chunking import chunk_documents
-from ..operators.extraction import split_errors
+from ..operators.extraction import split_errors, split_records
 from .kg_build import KGBuildConfig, extract_chunks, merge_kg, release
 
 
@@ -162,21 +161,22 @@ def run_indexing(
     )
 
     # ---- Stage 2: extraction (cache-aware) + records/cache tables ------------
-    # The build's extraction half over the stored chunks, always pinned:
-    # the records table, the llm_cache table, the failure rollup and the
-    # merge all read its records / mention / triple pins.  Its cache rejoin
-    # is CONTENT-keyed, so responses cached under other chunking options
-    # miss and the model is called again.  The prior llm_cache is only read
-    # while the records pin materializes, and _swap_in writes the new table
-    # to a tmp dir first, so the prior one stays readable until then.
+    # The build's extraction half over the stored chunks, unpinned: its
+    # records stream into the durable records table, and the llm_cache
+    # table, the failure rollup and the merge read that table.  The cache
+    # rejoin is CONTENT-keyed, so responses cached under other chunking
+    # options miss and the model is called again.
     t0 = time.time()
-    cfg = dataclasses.replace(cfg, cache_records=True)
     counter = spark.sparkContext.accumulator(0)
-    ex = extract_chunks(chunks, cfg, prior_cache, counter)
+    ex = extract_chunks(
+        chunks, dataclasses.replace(cfg, cache_records=False), prior_cache, counter
+    )
     _swap_in(ex.records, records_path)
-    _swap_in(ex.llm_cache, cache_path)
+    records = spark.read.parquet(records_path)
+    mentions, triples, cache = split_records(records)
+    _swap_in(cache, cache_path)
     metrics["stages"]["extraction"] = {
-        "records": ex.records.count(),
+        "records": records.count(),
         "model_calls": counter.value,
         "sec": round(time.time() - t0, 3),
     }
@@ -184,7 +184,7 @@ def run_indexing(
     # ---- failure rollup: chunk-level error records -> per-doc FAILED ----------
     # chunk ids are positional "{doc_id}-chunk-{NNN}", so the owning doc is
     # derivable scan-side — no join, no shuffle.
-    errors = split_errors(ex.records).withColumn(
+    errors = split_errors(records).withColumn(
         "doc_id", F.regexp_replace("chunk_id", "-chunk-[0-9]+$", "")
     )
     failed_docs = (
@@ -195,7 +195,6 @@ def run_indexing(
     )
     n_failed = failed_docs.count()
     metrics["docs_failed"] = n_failed
-    mentions, triples = ex.mentions, ex.triples
     if n_failed:
         # A FAILED doc contributes nothing to the graph: every record from
         # any of its chunks is excluded from the merge (reference: the whole
@@ -209,11 +208,11 @@ def run_indexing(
 
     # ---- Stage 3: merge -> graph tables (the build's merge half) -------------
     t0 = time.time()
-    nodes, edges = merge_kg(mentions, triples, cfg)
+    # pinned: both graph writes read the finals once
+    nodes, edges = merge_kg(mentions, triples, dataclasses.replace(cfg, cache_records=True))
     _swap_in(nodes, os.path.join(out_dir, "kg_nodes"))
     _swap_in(edges, os.path.join(out_dir, "kg_edges"))
-    release(ex.mentions, ex.triples, nodes, edges)
-    ex.records.unpersist()
+    release(nodes, edges)
     metrics["stages"]["graph"] = {
         "nodes": spark.read.parquet(os.path.join(out_dir, "kg_nodes")).count(),
         "edges": spark.read.parquet(os.path.join(out_dir, "kg_edges")).count(),

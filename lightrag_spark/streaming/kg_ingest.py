@@ -9,21 +9,23 @@ one ``upsert_pages_batch`` per micro-batch.
 
 Per-batch contract — each piece of work runs once:
 
-- extract once: ``extract_kg`` (sanitize -> chunk -> extract -> split)
-  runs over the batch's pages only;
+- extract once: ``build_chunks`` then ``extract_chunks`` (sanitize ->
+  chunk -> extract -> split) run over the batch's pages only;
 - merge or upsert once: with no committed graph yet the batch runs the
   build's merge half (``merge_kg``); otherwise it runs ``upsert_graph``
   against the stored node/edge tables, merging each new record once
   against the stored row, as the reference does.  Never both;
-- pin once: the extraction records, chunks, mentions and triples, and the
-  merged or upserted node/edge tables are each materialized a single
-  time, and the cache append and both table writes scan those pins;
+- pin once: the extraction records, mentions and triples, and the merged
+  or upserted node/edge tables are each materialized a single time, and
+  the cache append and both table writes scan those pins (the chunks are
+  read only by the extraction; ``build_chunks`` pins them as ``build_kg``
+  does, under the caller's ``cache_records``);
 - release at commit: everything the batch pinned is dropped when it
   commits (the records right after the cache append), so a long-running
   stream holds no blocks from earlier batches.
 
-Everything after the extraction is ``_commit_batch``, which
-``plans/custom_kg.insert_custom_chunks`` runs too.  The commit itself is
+Everything after the chunk step is ``_commit_batch``, which
+``plans/custom_kg.insert_custom_chunks`` runs too, on its own chunks.  The commit itself is
 atomic (write-to-tmp + rename — the local-FS stand-in for an Iceberg
 snapshot commit, as ``plans/runner._swap_in`` is).  The extraction cache
 rows append per batch, so delete/rebuild and resume work identically over
@@ -57,7 +59,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.incremental_merge import upsert_graph
-from ..plans.kg_build import KGBuildConfig, KGExtraction, extract_kg, merge_kg, release
+from ..plans.kg_build import KGBuildConfig, build_chunks, extract_chunks, merge_kg, release
 from ..sources.pages import PAGES_SCHEMA, enqueue_documents
 
 NODES = "kg_nodes"
@@ -91,12 +93,18 @@ def _commit_pair(nodes: DataFrame, edges: DataFrame, graph_dir: str) -> None:
 
 
 def _commit_batch(
-    spark: SparkSession, ex: KGExtraction, graph_dir: str, cfg: KGBuildConfig
+    spark: SparkSession, chunks: DataFrame, graph_dir: str, cfg: KGBuildConfig
 ) -> dict:
-    """Merge or upsert a pinned extraction into ``graph_dir``, append its
-    cache rows, swap the node/edge pair in, and release every pin.
-    ``cfg.cache_records`` must be on (``ex`` came from a pinned
-    extraction).  Returns the batch's mention/triple counts."""
+    """Extract ``chunks``, merge or upsert them into ``graph_dir``, append
+    their cache rows, swap the node/edge pair in, and release every pin.
+
+    Always pinned (``cache_records`` on, whatever ``cfg`` says): the
+    extraction fans out into the cache append and both table writes, and
+    the merge or upsert into both writes, so without the pins each consumer
+    would re-run the model stage and the summary UDF.  Returns the batch's
+    mention/triple counts."""
+    cfg = dataclasses.replace(cfg, cache_records=True)
+    ex = extract_chunks(chunks, cfg)
     pins = [ex.chunks, ex.mentions, ex.triples]
     nodes_path = os.path.join(graph_dir, NODES)
     edges_path = os.path.join(graph_dir, EDGES)
@@ -137,14 +145,10 @@ def upsert_pages_batch(
     ``ainsert`` on an existing graph) — foreachBatch below just calls it.
     Returns per-batch lineage metrics (the streaming twin of the runner's
     per-partition metrics side-table, ``plans/runner.run_indexing``).
-
-    The body always pins (``cache_records`` on, whatever ``cfg`` says):
-    the extraction fans out into the cache append and both table writes,
-    and the merge or upsert into both writes, so without the pins each
-    consumer would re-run the model stage and the summary UDF.
+    The batch pins as ``_commit_batch`` says.
     """
-    cfg = dataclasses.replace(cfg or KGBuildConfig(), cache_records=True)
-    return _commit_batch(spark, extract_kg(enqueue_documents(pages), cfg), graph_dir, cfg)
+    cfg = cfg or KGBuildConfig()
+    return _commit_batch(spark, build_chunks(enqueue_documents(pages), cfg), graph_dir, cfg)
 
 
 def stream_kg_ingest(
